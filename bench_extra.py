@@ -167,7 +167,7 @@ def run_phases(tag=""):
         deduped = themed.repartition(nparts, "osm_id", "src").dropDuplicates(
             ["osm_id", "src"]
         )
-        n_tiles = tile_counts(deduped, 2, 8, exact=True, strip=False).count()
+        n_tiles = tile_counts(deduped, 2, 8, exact=True).count()
         t["dedup_tiles"] = round(time.perf_counter() - t0, 3)
 
         lineage.release(themed, entities, wcoords)

@@ -39,6 +39,8 @@ import tempfile
 
 from pyspark.sql import DataFrame
 
+from .parallel import _UNKNOWN_SIZE_FLOOR, _plan_size_bytes
+
 
 def eager_local_checkpoint(df: DataFrame) -> DataFrame:
     """Materialize now; return a frame whose plan is a flat RDD scan."""
@@ -89,7 +91,10 @@ def eager_parquet_checkpoint(df: DataFrame, path: str | None = None) -> DataFram
 # Auto store selection threshold (bytes of Catalyst's optimizer size
 # estimate — for a parquet scan this is roughly COMPRESSED on-disk
 # bytes, while the crossover was measured on the decoded row width;
-# the decode expands the input ~2.5×, which the threshold bakes in).
+# the decoded entity table's localCheckpoint row store is ~5× the input
+# parquet's on-disk bytes — measured 4.5× on the 8k-doc perfbench
+# export input and 5.0× on the sf0.1 bench input, OPTIMIZATION_r06.md
+# §1c — which the threshold bakes in).
 # The two stores win in different regimes, measured on the same
 # pipeline with identical outputs: parquet is 15% faster at 24 M docs
 # and scales 0.86 vs 0.52 from 2→8 cores (BENCH/AB_CKPT.json,
@@ -103,18 +108,14 @@ def eager_parquet_checkpoint(df: DataFrame, path: str | None = None) -> DataFram
 # docs) is 24 MB compressed so auto keeps it on localCheckpoint, and
 # an ABBA-ordered store A/B at exactly that batch confirms local is
 # right there: local won 5/5 clean pairs, min 10.91 vs parquet 11.23,
-# med 11.34 vs 12.37 (scripts/exp_ckpt_store.py, probe 0.218) — the
+# med 11.34 vs 12.37 (OPTIMIZATION_r06.md §1c, probe 0.218) — the
 # ~1 s/materialization parquet write+re-read latency still dominates
 # a seconds-long run.  Parquet's proven regime is the 24M-doc scale
 # (the 0.86-vs-0.52 scaling rows above, GB-class decoded row stores);
-# 64 MiB of compressed scan ≈ 0.5-1 GB decoded, which is where that
-# regime starts.
+# 64 MiB of compressed scan ≈ 320 MiB of decoded rows at the ~5×
+# expansion above, so auto switches to parquet somewhat before that
+# regime.
 AUTO_PARQUET_THRESHOLD = 64 << 20
-
-# Catalyst reports defaultSizeInBytes (~Long.MaxValue) when a plan node
-# has no real statistics (LogicalRDD-backed frames).  Estimates at or
-# beyond this floor mean "unknown", not "huge".
-_UNKNOWN_SIZE_FLOOR = 1 << 60
 
 
 def resolve_auto(df: DataFrame, mode, threshold: int | None = None):
@@ -137,17 +138,6 @@ def resolve_auto(df: DataFrame, mode, threshold: int | None = None):
     if est is None or est >= _UNKNOWN_SIZE_FLOOR:
         return "parquet"
     return "parquet" if est >= threshold else "local"
-
-
-def _plan_size_bytes(df: DataFrame):
-    """Catalyst's optimizer size estimate (bytes); None if unavailable.
-    Pure plan metadata — no job runs."""
-    try:
-        return int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:
-        return None
 
 
 def eager_checkpoint(df: DataFrame, mode) -> DataFrame:

@@ -58,32 +58,6 @@ from ..functions.cells import cell_from_zxy, cover_at_zoom, lonlat_to_tile, poly
 
 DEFAULT_COVER_ZOOM = 10
 
-# Plan shape for clip_features (round-6 optimization, guide §2.4/§4):
-#   "fused" — ONE branch: the exact kernel rides an expression-level
-#             pandas_udf whose inputs are NULLed for non-boundary rows
-#             (Arrow payload stays proportional to the candidate
-#             fraction), results coalesced with the originals.  The
-#             upstream feature subtree is scanned ONCE per action.
-#   "union" — the round-5 shape: kept-rows branch ∪ mapInPandas over
-#             the boundary-candidate branch.  Both branches re-evaluate
-#             the upstream subtree (incl. the relation-assembly join)
-#             once per action when the caller does not materialize it.
-# The exact kernel is 1→{0,1} rows per feature (cut pieces are packed
-# into one multi-part geometry), so both shapes emit identical rows
-# (row-level parity gated in tests/test_clip.py and
-# scripts/exp_fused_clip.py across rect / concave / invalid-AOI routes).
-#
-# MEASURED (r6, scripts/exp_fused_clip.py, interleaved, probe 0.205):
-# at the driver's sf1.0 batch the union shape wins (min 4.96 s vs
-# fused 6.04 s themed-phase wall) — the duplicated subtree re-reads
-# checkpointed RDDs and overlaps on idle cores, while the fused kernel
-# pays the Arrow row stream for EVERY non-'o' row.  "union" stays the
-# default; "fused" remains available for deployments where the clip
-# consumer cannot materialize upstream and the double evaluation is
-# genuinely expensive.
-CLIP_SHAPE = "union"
-
-
 class AOI:
     """Driver-side prepared AOI: rings + convexity + (lazy) cell cover.
 
@@ -323,98 +297,11 @@ def _exact_batch(pdf, rings, clip_polys):
     return kept
 
 
-_GEOM_COLS = ("geom_type", "xs", "ys", "ring_offsets", "part_offsets")
-
-_CLIP_KERNEL_SCHEMA = (
-    "keep boolean, geom_type string, xs array<double>, ys array<double>, "
-    "ring_offsets array<int>, part_offsets array<int>"
-)
-
-
-def _fused_clip(features: DataFrame, with_cls: DataFrame, b_aoi) -> DataFrame:
-    """Single-branch clip plan: 'o' rows filtered out, the exact kernel
-    evaluated as an expression-level pandas_udf over geometry inputs
-    that are NULLed for 'i' rows (Arrow ships only the boundary
-    candidates' coordinates), then per-column coalesce picks the
-    original geometry for 'i' rows and the kernel's cut for 'b' rows.
-    One scan of the upstream subtree per action — the union shape scans
-    it once per branch."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(_CLIP_KERNEL_SCHEMA)
-    def clip_kernel(
-        gt: pd.Series,
-        xs: pd.Series,
-        ys: pd.Series,
-        ro: pd.Series,
-        po: pd.Series,
-    ) -> pd.DataFrame:
-        a = b_aoi.value
-        rings = [np.asarray(r) for r in a["rings"]]
-        clip_polys = (
-            None
-            if a["clip_polys"] is None
-            else [np.asarray(p) for p in a["clip_polys"]]
-        )
-        n = len(gt)
-        keep = np.zeros(n, dtype=bool)
-        cols = {c: np.empty(n, dtype=object) for c in _GEOM_COLS}
-        mask = gt.notna().to_numpy()
-        if mask.any():
-            idx = np.nonzero(mask)[0]
-            sub = pd.DataFrame(
-                {
-                    "__i": idx,
-                    "geom_type": gt.iloc[idx].to_numpy(),
-                    "xs": xs.iloc[idx].to_numpy(),
-                    "ys": ys.iloc[idx].to_numpy(),
-                    "ring_offsets": ro.iloc[idx].to_numpy(),
-                    "part_offsets": po.iloc[idx].to_numpy(),
-                }
-            )
-            res = _exact_batch(sub, rings, clip_polys)
-            if len(res):
-                pos = res["__i"].to_numpy(np.int64)
-                keep[pos] = True
-                for c in _GEOM_COLS:
-                    cols[c][pos] = res[c].to_numpy()
-        out = {"keep": keep}
-        out.update(cols)
-        return pd.DataFrame(out)
-
-    gated = [
-        F.when(F.col("__clip") == "b", F.col(c)) for c in _GEOM_COLS
-    ]
-    df = with_cls.where(F.col("__clip") != "o").withColumn(
-        "__cr", clip_kernel(*gated)
-    )
-    keep = (F.col("__clip") == "i") | F.col("__cr").getField("keep")
-    cols = [
-        F.when(F.col("__clip") == "i", F.col(c))
-        .otherwise(F.col("__cr").getField(c))
-        .alias(c)
-        if c in _GEOM_COLS
-        else F.col(c)
-        for c in features.columns
-    ]
-    return df.where(keep).select(*cols)
-
-
-def clip_features(
-    features: DataFrame, aoi: AOI, persist: bool = False, checkpoint: bool = False
-) -> DataFrame:
+def clip_features(features: DataFrame, aoi: AOI) -> DataFrame:
     """The full clip operator.  Narrow (no shuffle): classify + exact
-    kernel are both vectorized maps with the AOI broadcast.
-
-    ``persist=True`` caches + eagerly materializes the classified frame:
-    the kept / boundary-candidate split is two branches whose stages run
-    concurrently inside the next action, and on a cold cache each one
-    recomputes the whole upstream (incl. the classify UDF) itself.
-    The cache is appended to the input's ``_persisted_intermediates``
-    list (shared object) so the pipeline owner unpersists everything.
-    ``checkpoint=True`` materializes via localCheckpoint instead —
-    same single-compute guarantee, plus downstream actions plan over a
-    flat LogicalRDD (see `lineage` module for the trade-off)."""
+    kernel are both vectorized maps with the AOI broadcast.  The
+    input's ``_persisted_intermediates`` list is passed through so the
+    pipeline owner can release everything upstream."""
     spark = features.sparkSession
     sc = spark.sparkContext
     b_aoi = sc.broadcast(
@@ -458,23 +345,8 @@ def clip_features(
     else:
         cls = F.when(disjoint, "o").otherwise(classify(xmin, ymin, xmax, ymax))
     with_cls = features.withColumn("__clip", cls)
-    persisted = getattr(features, "_persisted_intermediates", [])
-    if checkpoint:
-        from .. import lineage
-
-        with_cls = lineage.eager_checkpoint(
-            with_cls, checkpoint if isinstance(checkpoint, str) else "local"
-        )
-        persisted.append(with_cls)
-    elif persist:
-        with_cls = with_cls.persist()
-        with_cls.count()
-        persisted.append(with_cls)
-    if CLIP_SHAPE == "fused":
-        out = _fused_clip(features, with_cls, b_aoi)
-        out._persisted_intermediates = persisted
-        return out
-
+    # inside rows ∪ exact kernel over the boundary rows: a fused one-branch
+    # shape measured slower at sf1.0 (6.04 s vs 4.96 s, OPTIMIZATION_r06.md)
     kept = with_cls.where(F.col("__clip") == "i").drop("__clip")
     candidates = with_cls.where(F.col("__clip") == "b").drop("__clip")
 
@@ -497,5 +369,5 @@ def clip_features(
 
     clipped = candidates.mapInPandas(exact, schema=schema)
     out = kept.unionByName(clipped)
-    out._persisted_intermediates = persisted
+    out._persisted_intermediates = getattr(features, "_persisted_intermediates", [])
     return out

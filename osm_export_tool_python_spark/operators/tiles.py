@@ -495,17 +495,16 @@ def exact_cells_udf(min_zoom: int, max_zoom: int):
     def _cells(
         geom_type: pd.Series, xs: pd.Series, ys: pd.Series, ring_offsets: pd.Series
     ) -> pd.Series:
-        # pandas UDFs evaluate unconditionally, so rows CASE-routed to
-        # the pure-Column single-tile path still arrive here — as
+        # pandas UDFs evaluate unconditionally, so rows routed to the
+        # pure-Column single-tile path still arrive here — as
         # all-NULL inputs.  Subset to the real (straddler) rows BEFORE
         # any per-row work and scatter the kernel output back over a
         # None-filled result: the null majority costs a boolean mask,
         # not four list comprehensions and an empty array per row
         # (measured 1.38× per batch at a 62%-null mix; grows with the
         # null fraction — a pure-point export batch is ~all null).
-        # The None results
-        # are never read — the CASE takes the single-tile branch for
-        # exactly those rows.  Kernel output is deduped by the
+        # The None results are never read — the single-tile projection
+        # builds those rows' cells.  Kernel output is deduped by the
         # per-level shift chain, so no JVM-side distinct downstream.
         # Routed-away rows are identified by their NULLED coordinate
         # arrays, NOT by geom_type: a row with a NULL geom_type but
@@ -532,360 +531,117 @@ def exact_cells_udf(min_zoom: int, max_zoom: int):
     return _cells
 
 
-# Longest bbox cover (tiles per axis at max_zoom) that the pure-Column
-# strip path handles; longer strips go to the kernel.  8 tiles at z8 is
-# ~11° of longitude — far under the 180° wrap guard — and bounds the
-# per-row sequence materialization.
-STRIP_MAX_TILES = 8
-
-
-def _single_cells_expr(min_zoom: int, max_zoom: int):
-    """array<long> of the one tile per zoom for a SINGLE-TILE feature
-    (bbox fits in one tile at max_zoom, hence at every coarser zoom):
-    pure Column `transform` over the zoom range, no Python."""
-    return F.transform(
-        F.sequence(F.lit(min_zoom), F.lit(max_zoom)),
-        lambda z: cell_col(
-            z,
-            tile_x_col(F.array_min("xs"), z),
-            tile_y_col(F.array_min("ys"), z),
-        ),
-    )
-
-
-def _routing_predicates(max_zoom: int):
-    """(single, is_strip) routing Columns for exact tile assignment —
-    shared by `with_tile_cells_exact` and `routing_class_counts`."""
+def _single_tile(max_zoom: int):
+    """Routing predicate for exact tile assignment — shared by
+    `with_tile_cells_exact` and `routing_class_counts`: points, and any
+    geometry whose bbox fits in one tile at max_zoom (hence at every
+    coarser zoom too, since tiles nest), intersect exactly one tile per
+    zoom."""
     zm = F.lit(max_zoom)
     nx = tile_x_col(F.array_max("xs"), zm) - tile_x_col(F.array_min("xs"), zm)
     ny = tile_y_col(F.array_min("ys"), zm) - tile_y_col(F.array_max("ys"), zm)
-    single = (F.col("geom_type") == "point") | ((nx == 0) & (ny == 0))
-    # exactly one part: NULL offsets, or the trivial [0, len(xs)]
-    # cover — anything else (multi-part lines from clipping,
-    # multi-ring polygons) may be DISCONNECTED, where the strip
-    # argument fails (two parts at opposite strip ends leave gap
-    # tiles the bbox cover would wrongly include)
-    one_part = F.col("ring_offsets").isNull() | (
-        (F.size("ring_offsets") == 2)
-        & (F.element_at("ring_offsets", 1) == F.lit(0))
-        & (F.element_at("ring_offsets", 2) == F.size("xs"))
-    )
-    lim = F.lit(STRIP_MAX_TILES - 1)
-    is_strip = (
-        F.col("geom_type").isin("line", "polygon")
-        & one_part
-        & ((F.array_max("xs") - F.array_min("xs")) < F.lit(180.0))
-        & (
-            ((ny == 0) & (nx > 0) & (nx <= lim))
-            | ((nx == 0) & (ny > 0) & (ny <= lim))
-        )
-    )
-    return single, is_strip
+    return (F.col("geom_type") == "point") | ((nx == 0) & (ny == 0))
 
 
 def routing_class_counts(features: DataFrame, max_zoom: int) -> dict:
     """Diagnostic: how many feature rows each exact-assignment route
-    would take at `max_zoom` — {'single': n, 'strip': n, 'kernel': n}.
-    One aggregation pass, no tile fanout."""
-    single, is_strip = _routing_predicates(max_zoom)
+    would take at `max_zoom` — {'single': n, 'kernel': n}.  One
+    aggregation pass, no tile fanout."""
+    single = _single_tile(max_zoom)
     row = features.select(
         F.sum(F.when(single, 1).otherwise(0)).alias("single"),
-        F.sum(F.when(~single & is_strip, 1).otherwise(0)).alias("strip"),
-        F.sum(
-            F.when(single | is_strip, 0).otherwise(1)
-        ).alias("kernel"),
+        F.sum(F.when(single, 0).otherwise(1)).alias("kernel"),
     ).collect()[0]
-    return {k: int(row[k] or 0) for k in ("single", "strip", "kernel")}
+    return {k: int(row[k] or 0) for k in ("single", "kernel")}
 
 
 def with_tile_cells_exact(
-    features: DataFrame, min_zoom: int, max_zoom: int, strip: bool = False,
-    split="fused",
+    features: DataFrame, min_zoom: int, max_zoom: int
 ) -> DataFrame:
     """Add `cell` (exploded): one row per (feature, tile, zoom) with
     INTERSECTION semantics — a tile appears iff the feature's geometry
     actually touches it.  Fanout is O(tiles intersected): no cap,
     nothing dropped.
 
-    DEFAULT SHAPE is `split="fused"` (r6): ONE scan, one explode, no
-    union — the kernel UDF sees NULLed inputs for single-tile rows and
-    the singles' cells are built by the codegen'd explode-then-project
-    bit-shift (see the inline comment in the fused branch).  Outputs
-    are identical to the other shapes (parity-gated in
-    tests/test_tiles.py).  `split=True` keeps the r5 UNION shape —
-    measured 19× faster than the one-scan CASE shape and 3.3× faster
-    than even the pure-Column bbox cover on the compact-ways corpus at
-    z2-12 (BENCH/AB_SHAPE.json: 2.45 s vs 47.1 s vs 8.0 s, identical
-    outputs), but it scans its input twice and the two branches' pruned
-    exchanges defeat ReuseExchange.  `split=False` keeps the one-scan
-    CASE shape for inputs with NO reuse point upstream (no
-    shuffle/checkpoint between an expensive lineage and this call),
-    where scanning twice would recompute that lineage twice — fused
-    also scans once, so the remaining reason to pick CASE is its
-    `strip=True` support.
-
-    CASE shape (`split=False`) — single-pass three-way routing (no
-    union, one scan, one explode):
-      - SINGLE-TILE features — points, and any geometry whose bbox
-        fits in one tile at max_zoom (hence at every coarser zoom too,
-        since tiles nest): exactly one tile per zoom, for ANY geometry
-        shape (everything inside the tile intersects it and nothing
-        else).  At OSM-like size distributions this is every node and
-        almost every way; it compiles to ONE flat pure-Column
-        `transform` over the zoom range — one small array per row, no
-        Python, codegen-friendly;
-      - STRIP features — a SINGLE CONNECTED part (one polyline, or one
-        polygon ring) whose bbox cover at max_zoom is one tile ROW or
-        one tile COLUMN (1×N / N×1, N ≤ STRIP_MAX_TILES): the exact
-        tile set IS the bbox cover, again pure Column.  Proof: ⊆ — the
-        geometry and (for polygons) its even-odd interior lie inside
-        the convex bbox, which lies inside the strip; ⊇ — a connected
-        path whose lon (resp. lat) extent reaches the first and last
-        tile of the strip takes every intermediate value, so it has a
-        point strictly interior to every intermediate tile's axis band
-        while staying inside the strip's single cross-axis band.
-        Coarser zooms stay exact because shifting a contiguous tile
-        range yields the contiguous bbox-cover range at that zoom and
-        a 1-wide axis stays 1-wide (tiles nest).  The lon-span < 180°
-        guard excludes any geometry containing an antimeridian-wrapped
-        segment (such a segment's raw endpoints differ by > 180°).
-        Straddling ONE tile edge is ~linear in feature size while
-        straddling a corner is ~quadratic, so strips are the dominant
-        straddler class — routing them Column-side shrinks the Arrow
-        kernel's input to true multi-row-and-column features;
-      - everything else: the vectorized supercover + scanline kernel.
-        The kernel UDF is fed NULLs for Column-routed rows — pandas
-        UDFs evaluate unconditionally, so the nulling keeps the Arrow
-        transfer proportional to the kernel subset only.
+    One scan, one explode, no union.  SINGLE-TILE rows (see
+    `_single_tile`) never reach Python: the explode emits their zoom
+    sequence and the cell is built by a top-level codegen'd projection
+    — tile x/y computed ONCE at max_zoom (the only trig) and every
+    coarser zoom derived by bit shift, exact because the tile grid
+    nests by halving: floor(frac·2^z) == floor(frac·2^zmax) >>
+    (zmax − z), clamps included.  Every other row (including rows
+    whose routing predicate is NULL) goes to the vectorized supercover
+    + scanline kernel, whose UDF inputs are NULLed for single-tile rows
+    so the Arrow payload stays proportional to the straddler subset.
+    This shape won the r5/r6 A/Bs: it avoids the interpreted
+    higher-order `transform` that made the one-scan CASE shape 19×
+    slower, and the double scan that stopped ReuseExchange serving the
+    union shape's second branch (BENCH/AB_SHAPE.json,
+    OPTIMIZATION_r06.md).
 
     Measure-zero boundary contacts (a vertex exactly on a tile edge)
     may differ between the Column and kernel routes, matching the
     module contract (see the traversal-convention note above
-    `_segment_supercover`).
-
-    strip DEFAULT OFF — a measured negative result (BENCH/AB_STRIP.json):
-    on a realistic compact-ways corpus at z2-12 where strips are 80%
-    of straddlers, the stage-level paired A/B put the strip route 6%
-    SLOWER than kernel-for-everything (47.0 s vs 50.1 s best-of-3,
-    identical outputs) — the flat-numpy Arrow kernel processes a
-    straddler row cheaper than Catalyst materializes the per-row
-    nested zoom/x/y sequences, and the routing predicate taxes every
-    row.  Exactness of the strip route is independently fuzz-gated
-    (tests/test_tiles.py), so the knob remains available if a future
-    Arrow-starved deployment (Python workers contending with the JVM)
-    tips the balance the other way.
-
-    `split=True` (DEFAULT) — UNION shape: instead of one scan whose
-    single ArrowEvalPython node sees EVERY row (Column-routed rows as
-    NULLs), the frame is filtered into the single-tile branch (pure
-    Column, no Python at all) and the kernel branch (UDF over the
-    straddler subset ONLY), then unioned.  Two effects stack: (a) the
-    Arrow boundary — worker batch framing, pandas Series construction,
-    result alignment — is paid per ROW REACHING THE NODE even when the
-    payload is NULL, and the union shape shrinks that row count ~30×
-    at OSM-like size distributions; (b) far bigger, the CASE shape's
-    single-tile cells are built by a higher-order `transform` lambda,
-    which Catalyst evaluates on the INTERPRETED expression path
-    (higher-order functions don't codegen) — measured 48.2 s for that
-    branch alone, vs the union shape's codegen'd explode-then-project
-    (trig once at max_zoom, coarser zooms by bit shift).  Cost: the
-    input is scanned twice — but every pipeline here feeds this from a
-    shuffle/checkpoint output, so Spark's ReuseExchange serves the
-    second branch from the same shuffle files and nothing upstream
-    recomputes; pass split=False if you must call it on a raw
-    un-exchanged expensive lineage.  Rows whose routing predicate is
-    NULL (degenerate empty geometry) go to the kernel branch, exactly
-    as the CASE shape's `when` fall-through routes them."""
-    single, is_strip = _routing_predicates(max_zoom)
-    if strip and split is not False:
-        import warnings
-
-        warnings.warn(
-            "strip=True is only honored by the CASE shape (split=False); "
-            "the fused/union shapes route strips to the kernel (same "
-            "output, measured faster — BENCH/AB_STRIP.json)",
-            stacklevel=2,
-        )
-    if not strip:
-        is_strip = F.lit(False)
-    routed = single | is_strip
-
-    if split == "fused":
-        # FUSED shape (r6 default): ONE scan, ONE explode, no union.
-        # The union shape (split=True) reads its input twice; feeding it
-        # from the themed-export's repartition exchange, the two
-        # branches prune different column sets, so their exchanges are
-        # NOT identical and ReuseExchange cannot serve the second scan
-        # — stage-level profiling showed the exchange map side and the
-        # dedup aggregate each computed TWICE (two ~64-task map stages
-        # plus a 128-task union stage).  Here both routes share one
-        # scan: the kernel UDF sees NULLed inputs for single-tile rows
-        # (Arrow payload stays proportional to the straddler subset,
-        # the CASE-shape nulling convention), and the explode emits the
-        # zoom SEQUENCE for single-tile rows but the kernel's cell
-        # array for straddlers.  The single-tile cell is then built as
-        # a TOP-LEVEL codegen'd projection (trig once at max_zoom via
-        # __xm/__ym, coarser zooms by bit shift) — the same
-        # explode-then-project trick as the union shape's singles
-        # branch, avoiding the interpreted higher-order `transform`
-        # that made the original CASE shape 19x slower.
-        routed1 = F.coalesce(single, F.lit(False))
-        narr = F.lit(None).cast("array<double>")
-        kernel_cells = exact_cells_udf(min_zoom, max_zoom)(
-            F.when(routed1, F.lit(None).cast("string")).otherwise(F.col("geom_type")),
-            F.when(routed1, narr).otherwise(F.col("xs")),
-            F.when(routed1, narr).otherwise(F.col("ys")),
-            F.when(routed1, F.lit(None).cast("array<int>")).otherwise(
-                F.col("ring_offsets")
-            ),
-        )
-        zseq = F.sequence(F.lit(min_zoom), F.lit(max_zoom)).cast("array<long>")
-        return (
-            features.withColumn("__sgl", routed1)
-            .withColumn(
-                "__xm",
-                F.when(routed1, tile_x_col(F.array_min("xs"), F.lit(max_zoom))),
-            )
-            .withColumn(
-                "__ym",
-                F.when(routed1, tile_y_col(F.array_min("ys"), F.lit(max_zoom))),
-            )
-            .withColumn(
-                "__v", F.explode(F.when(routed1, zseq).otherwise(kernel_cells))
-            )
-            .withColumn(
-                "cell",
-                F.when(
-                    F.col("__sgl"),
-                    cell_col(
-                        F.col("__v"),
-                        F.expr(
-                            "shiftrightunsigned(__xm, cast(%d - __v as int))"
-                            % max_zoom
-                        ),
-                        F.expr(
-                            "shiftrightunsigned(__ym, cast(%d - __v as int))"
-                            % max_zoom
-                        ),
-                    ),
-                ).otherwise(F.col("__v")),
-            )
-            .drop("__sgl", "__xm", "__ym", "__v")
-        )
-
-    if split:
-        kernel_direct = exact_cells_udf(min_zoom, max_zoom)(
-            F.col("geom_type"), F.col("xs"), F.col("ys"), F.col("ring_offsets")
-        )
-        # Singles branch: explode the zoom FIRST, then build the cell
-        # as a TOP-LEVEL projection — inside whole-stage codegen with
-        # common-subexpression elimination.  The array-building
-        # `transform` lambda the CASE shape uses is evaluated by the
-        # INTERPRETED expression path (higher-order functions don't
-        # codegen), where `_spread_bits_col`'s per-step subtree
-        # duplication makes every cell a multi-thousand-node tree
-        # including the mercator trig — measured 48.2 s for this
-        # branch alone vs 1.8 s for the Arrow kernel over ALL
-        # straddlers (BENCH/AB_SHAPE.json attribution).  Tile x/y are
-        # computed ONCE at max_zoom (the only trig) and every coarser
-        # zoom is derived by bit-shift — exact, because the tile grid
-        # nests by halving and the fractional position is scaled by
-        # exact powers of two: floor(frac·2^z) == floor(frac·2^zmax) >>
-        # (zmax − z), clamps included.
-        sgl = (
-            features.where(single)
-            .withColumn("__xm", tile_x_col(F.array_min("xs"), F.lit(max_zoom)))
-            .withColumn("__ym", tile_y_col(F.array_min("ys"), F.lit(max_zoom)))
-            .withColumn(
-                "__z", F.explode(F.sequence(F.lit(min_zoom), F.lit(max_zoom)))
-            )
-            .withColumn(
-                "cell",
-                cell_col(
-                    F.col("__z"),
-                    F.expr("shiftrightunsigned(__xm, %d - __z)" % max_zoom),
-                    F.expr("shiftrightunsigned(__ym, %d - __z)" % max_zoom),
-                ),
-            )
-            .drop("__xm", "__ym", "__z")
-        )
-        # NOT-TRUE (not ~single): a NULL predicate row must reach
-        # the kernel, matching the CASE shape's fall-through
-        kern = features.where(~F.coalesce(single, F.lit(False))).withColumn(
-            "cell", F.explode(kernel_direct)
-        )
-        return sgl.unionByName(kern)
-
+    `_segment_supercover`)."""
+    single = F.coalesce(_single_tile(max_zoom), F.lit(False))
     narr = F.lit(None).cast("array<double>")
     kernel_cells = exact_cells_udf(min_zoom, max_zoom)(
-        F.when(routed, F.lit(None).cast("string")).otherwise(F.col("geom_type")),
-        F.when(routed, narr).otherwise(F.col("xs")),
-        F.when(routed, narr).otherwise(F.col("ys")),
-        F.when(routed, F.lit(None).cast("array<int>")).otherwise(
+        F.when(single, F.lit(None).cast("string")).otherwise(F.col("geom_type")),
+        F.when(single, narr).otherwise(F.col("xs")),
+        F.when(single, narr).otherwise(F.col("ys")),
+        F.when(single, F.lit(None).cast("array<int>")).otherwise(
             F.col("ring_offsets")
         ),
     )
-    single_cells = _single_cells_expr(min_zoom, max_zoom)
-    # the strip's bbox cover, every zoom in one flat array; one of the
-    # two per-zoom sequences always has length 1 (strip invariant), so
-    # this materializes exactly the strip cells
-    strip_cells = F.flatten(
-        F.transform(
-            F.sequence(F.lit(min_zoom), F.lit(max_zoom)),
-            lambda z: F.flatten(
-                F.transform(
-                    F.sequence(
-                        tile_x_col(F.array_min("xs"), z),
-                        tile_x_col(F.array_max("xs"), z),
-                    ),
-                    lambda x: F.transform(
-                        F.sequence(
-                            tile_y_col(F.array_max("ys"), z),
-                            tile_y_col(F.array_min("ys"), z),
-                        ),
-                        lambda y: cell_col(z, x, y),
-                    ),
-                )
-            ),
+    zseq = F.sequence(F.lit(min_zoom), F.lit(max_zoom)).cast("array<long>")
+    return (
+        features.withColumn("__sgl", single)
+        .withColumn(
+            "__xm",
+            F.when(single, tile_x_col(F.array_min("xs"), F.lit(max_zoom))),
         )
-    )
-    # kernel output is already deduped (per-level shift chain), so no
-    # array_distinct pass is needed here
-    cells = (
-        F.when(single, single_cells)
-        .when(is_strip, strip_cells)
-        .otherwise(kernel_cells)
-    )
-    return features.withColumn("cell", F.explode(cells))
-
-
-def point_tile_assignment(features: DataFrame, zoom: int) -> DataFrame:
-    """Exact single-zoom assignment for point features — pure pandas_udf
-    cell encode, no explode."""
-    from ..functions.cells import cell_udf
-
-    return features.where(F.col("geom_type") == "point").withColumn(
-        "cell", cell_udf(zoom)(F.try_element_at("xs", F.lit(1)), F.try_element_at("ys", F.lit(1)))
+        .withColumn(
+            "__ym",
+            F.when(single, tile_y_col(F.array_min("ys"), F.lit(max_zoom))),
+        )
+        .withColumn(
+            "__v", F.explode(F.when(single, zseq).otherwise(kernel_cells))
+        )
+        .withColumn(
+            "cell",
+            F.when(
+                F.col("__sgl"),
+                cell_col(
+                    F.col("__v"),
+                    F.expr(
+                        "shiftrightunsigned(__xm, cast(%d - __v as int))"
+                        % max_zoom
+                    ),
+                    F.expr(
+                        "shiftrightunsigned(__ym, cast(%d - __v as int))"
+                        % max_zoom
+                    ),
+                ),
+            ).otherwise(F.col("__v")),
+        )
+        .drop("__sgl", "__xm", "__ym", "__v")
     )
 
 
 def tile_counts(
     features: DataFrame, min_zoom: int, max_zoom: int, exact: bool = True,
-    strip: bool = False, split="fused",
+    strip: bool = False,
 ) -> DataFrame:
     """(z, x, y, n_features) — partial agg absorbs hot-cell skew.
     `exact=True` (default) assigns by geometry intersection; False is
-    the pure-Column bbox cover (superset).  `strip=True` enables the
-    1×N/N×1 pure-Column fast path inside exact assignment — measured
-    SLOWER than the kernel on this box (see with_tile_cells_exact),
-    kept as a knob.  `split=True` (default) uses the union shape
-    (Arrow kernel over the straddler subset only, singles codegen'd —
-    19× over the CASE shape, see with_tile_cells_exact); pass False
-    when the input has no shuffle/checkpoint reuse point upstream."""
+    the pure-Column bbox cover (superset).  `strip` only accepts False:
+    the 1×N/N×1 strip route it selected measured slower than the
+    kernel (BENCH/AB_STRIP.json) and was removed; the keyword stays for
+    existing callers that pass it explicitly."""
+    if strip:
+        raise ValueError("the strip tile route was removed; strip must be False")
     if exact:
-        with_cells = with_tile_cells_exact(
-            features, min_zoom, max_zoom, strip=strip, split=split
-        )
+        with_cells = with_tile_cells_exact(features, min_zoom, max_zoom)
     else:
         with_cells = with_tile_cells(features, min_zoom, max_zoom)
     counts = with_cells.groupBy("cell").agg(F.count("*").alias("n_features"))
@@ -920,7 +676,7 @@ def decode_cell_cols(cell_col="cell"):
 
 def tile_features(
     features: DataFrame, min_zoom: int, max_zoom: int, salt: int = 16,
-    exact: bool = True, max_ids_per_tile: int = 1024, split="fused",
+    exact: bool = True, max_ids_per_tile: int = 1024,
 ) -> DataFrame:
     """(z, x, y, n_features, osm_ids, n_overflow) — the packed tile
     table.  `n_features` is the EXACT per-tile feature count;
@@ -959,9 +715,7 @@ def tile_features(
 
     cap = int(max_ids_per_tile)
     if exact:
-        with_cells = with_tile_cells_exact(
-            features, min_zoom, max_zoom, split=split
-        )
+        with_cells = with_tile_cells_exact(features, min_zoom, max_zoom)
     else:
         with_cells = with_tile_cells(features, min_zoom, max_zoom)
     with_cells = with_cells.select("cell", "osm_id")

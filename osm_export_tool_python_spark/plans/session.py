@@ -129,7 +129,8 @@ def default_session(master=None, app_name="spark-osm-export", shuffle_partitions
             str(shuffle_partitions or 2 * int(master[6:-1] if master.startswith("local[") and master[6:-1].isdigit() else cpus)),
         )
         # CPU-dense scans (the span decode reads a compressed ~1 GB
-        # parquet and expands it ~15x while decoding) split far below
+        # parquet and expands it ~5x while decoding, see the
+        # lineage.AUTO_PARQUET_THRESHOLD note) split far below
         # the session's core count at the default 128 MiB
         # maxPartitionBytes: the 24M-doc scaling input arrives as 11
         # tasks, which over 8 cores is an 8+3 two-wave schedule — 5

@@ -95,9 +95,10 @@ _UDF_CACHE = {}
 
 def wkb_point_decode(col):
     """Vectorized WKB POINT (little-endian) hex → struct<lon,lat>.  One
-    unhexlify over the concatenated batch, zero per-row Python.
-    (pandas_udf is built lazily: pyspark 4 needs an active session to
-    parse the DDL return type.)"""
+    unhexlify over the concatenated batch, zero per-row Python; a
+    pure-Column conv()-based decoder measured 1.4-4× slower at every
+    width tried (OPTIMIZATION_r06.md).  (pandas_udf is built lazily:
+    pyspark 4 needs an active session to parse the DDL return type.)"""
     if "decode" not in _UDF_CACHE:
 
         @pandas_udf("struct<lon:double,lat:double>")
@@ -117,68 +118,6 @@ def wkb_point_decode(col):
 
         _UDF_CACHE["decode"] = _decode
     return _UDF_CACHE["decode"](col)
-
-
-#: Use the pure-Column (JVM codegen) WKB decoder instead of the pandas
-#: UDF.  Same bit-exact doubles either way (tests/test_synth_decode.py
-#: asserts equality).  r6 default: FALSE — the conv/substring double
-#: reconstruction is the decode scan's hottest expression (~2/3 of
-#: decode CPU; 140 task-cpu-seconds at the 550k-doc driver scale), and
-#: the vectorized numpy decoder (one unhexlify + frombuffer per Arrow
-#: batch) measured consistently faster at every width tried:
-#: 0.79 vs 1.54 s at local[32]/550k docs, 1.89 vs 7.60 s at
-#: local[2]/550k docs, 0.60 vs 0.82 s at local[32]/55k docs
-#: (interleaved min-of-N noop timings, OPTIMIZATION_r06.md).  The
-#: Arrow crossing ships only the 42-char media hex of node rows and
-#: the pipeline already runs Python workers (clip kernel, relation
-#: stitcher), so the worker pool is warm.  Set True to pin the
-#: zero-Python-crossing Column path.
-WKB_DECODE_JVM = False
-
-
-def _le_double(col, start_byte):
-    """IEEE-754 double from 8 little-endian bytes of a hex string,
-    reconstructed with exact Column arithmetic (no Python, no UDF):
-
-      hi word (bits 32-63) and lo word (bits 0-31) each fit a LONG via
-      conv(hex8, 16, 10); mantissa = (hi & 0xFFFFF)*2^32 + lo is ≤ 2^52
-      so the long is exact, mant/2^52 is a power-of-two division (exact
-      in binary), and multiplying by pow(2, exp-1023) is exact — the
-      reconstruction is bit-identical to frombuffer('<f8'), including
-      the exp==0x7FF specials (±Inf / NaN)."""
-
-    def byte_hex(i):
-        return F.substring(col, 2 * (start_byte + i) + 1, 2)
-
-    hi = F.conv(
-        F.concat(byte_hex(7), byte_hex(6), byte_hex(5), byte_hex(4)), 16, 10
-    ).cast("long")
-    lo = F.conv(
-        F.concat(byte_hex(3), byte_hex(2), byte_hex(1), byte_hex(0)), 16, 10
-    ).cast("long")
-    sign = F.shiftright(hi, 31).bitwiseAND(F.lit(1))
-    exp = F.shiftright(hi, 20).bitwiseAND(F.lit(0x7FF))
-    mant = hi.bitwiseAND(F.lit(0xFFFFF)) * F.lit(4294967296) + lo
-    frac = mant.cast("double") / F.lit(float(2**52))
-    mag = (
-        F.when(exp == 0x7FF, F.when(mant == 0, F.lit(float("inf"))).otherwise(F.lit(float("nan"))))
-        .when(exp == 0, frac * F.lit(float(2.0**-1022)))
-        .otherwise((F.lit(1.0) + frac) * F.pow(F.lit(2.0), (exp - 1023).cast("double")))
-    )
-    return F.when(sign == 1, -mag).otherwise(mag)
-
-
-def wkb_point_decode_col(col):
-    """Pure-Column WKB POINT (little-endian) hex → struct<lon,lat>.
-    Layout: byte 0 = order, 1-4 = type, 5-12 = x, 13-20 = y."""
-    return F.struct(
-        _le_double(col, 5).alias("lon"), _le_double(col, 13).alias("lat")
-    )
-
-
-def _pt_decode(col):
-    """Dispatch: JVM Column decoder (default) or pandas-UDF fallback."""
-    return wkb_point_decode_col(col) if WKB_DECODE_JVM else wkb_point_decode(col)
 
 
 def entities_table(docs_meta: DataFrame) -> DataFrame:
@@ -204,7 +143,7 @@ def entities_table(docs_meta: DataFrame) -> DataFrame:
     members = F.filter(spans, lambda s: s.kind == F.lit("member"))
     first = F.try_element_at(refs, F.lit(1)).media_ref
     last = F.try_element_at(refs, F.lit(-1)).media_ref
-    pt = _pt_decode(media.media_ref)
+    pt = wkb_point_decode(media.media_ref)
     return docs_meta.select(
         "src",
         "orig_id",
@@ -279,7 +218,7 @@ def nodes_table(docs_meta: DataFrame) -> DataFrame:
     df = docs_meta.where(F.col("src") == "node").select(
         F.col("orig_id").alias("node_id"),
         "tags",
-        _pt_decode(media.media_ref).alias("pt"),
+        wkb_point_decode(media.media_ref).alias("pt"),
     )
     return df.select("node_id", "tags", F.col("pt.lon").alias("lon"), F.col("pt.lat").alias("lat"))
 
@@ -393,7 +332,7 @@ def reencode_spans(docs_meta: DataFrame) -> DataFrame:
         ),
     )
     media = F.try_element_at(F.filter(spans, lambda s: s.kind == F.lit("media")), F.lit(1))
-    pt = _pt_decode(media.media_ref)
+    pt = wkb_point_decode(media.media_ref)
     media_spans = F.when(
         F.col("src") == "node",
         F.array(

@@ -335,13 +335,44 @@ def test_invalid_multiring_aoi_falls_back_uncut(spark):
     assert got[4]["xs"] == [-2.0, 2.0]
 
 
-def test_fused_shape_matches_union_shape(spark):
-    """CLIP_SHAPE='fused' (single-branch NULL-gated kernel) must emit
-    exactly the union shape's rows — geometry bit-identical (same numpy
-    kernel) — across inside/outside/boundary features, a concave AOI,
-    and the invalid-AOI keep-uncut fallback."""
-    from osm_export_tool_python_spark.operators import clip as clipmod
+def _clip_oracle(rows, aoi):
+    """Local numpy clip of FEATURE_SCHEMA tuples: rows outside the AOI
+    dropped, inside rows kept unchanged, boundary rows through the
+    exact kernel (`_exact_batch`)."""
+    import pandas as pd
 
+    from osm_export_tool_python_spark.operators.clip import _classify_batch, _exact_batch
+
+    cols = ["osm_id", "src", "geom_type", "tags", "xs", "ys",
+            "ring_offsets", "part_offsets"]
+    pdf = pd.DataFrame(rows, columns=cols)
+    cls = _classify_batch(
+        np.array([min(r[4]) for r in rows]),
+        np.array([min(r[5]) for r in rows]),
+        np.array([max(r[4]) for r in rows]),
+        np.array([max(r[5]) for r in rows]),
+        aoi.rings,
+    )
+    inside = pdf[cls == "i"]
+    boundary = pdf[cls == "b"].reset_index(drop=True)
+    clipped = _exact_batch(boundary, aoi.rings, aoi.clip_polys)
+    return pd.concat([inside, clipped], ignore_index=True).to_dict("records")
+
+
+def _canon(rows):
+    return sorted(
+        (r["osm_id"], r["geom_type"], tuple(r["xs"]), tuple(r["ys"]),
+         tuple(r["ring_offsets"]), tuple(r["part_offsets"]))
+        for r in rows
+    )
+
+
+def test_clip_matches_numpy_oracle(spark):
+    """clip_features emits exactly the local numpy oracle's rows —
+    geometry bit-identical (same numpy kernel) — across
+    inside/outside/boundary features, for a square AOI (pure-Column
+    classification), a concave AOI, and a bowtie AOI (invalid:
+    keep-uncut fallback)."""
     rows = [
         _pt(1, 5.0, 5.0),
         _pt(2, 20.0, 20.0),
@@ -359,25 +390,9 @@ def test_fused_shape_matches_union_shape(spark):
         AOI([np.array([[0.0, 0.0], [10.0, 10.0], [10.0, 0.0], [0.0, 10.0]])],
             cover_zoom=8),  # bowtie: clip_polys is None fallback
     ]
-
-    def canon(df):
-        out = clip_features(df, a).collect()
-        return sorted(
-            (r["osm_id"], r["geom_type"], tuple(r["xs"]), tuple(r["ys"]),
-             tuple(r["ring_offsets"]), tuple(r["part_offsets"]))
-            for r in out
-        )
-
-    from osm_export_tool_python_spark.operators.assemble import FEATURE_SCHEMA
-
+    assert aois[2].clip_polys is None
     df = spark.createDataFrame(rows, FEATURE_SCHEMA)
-    old = clipmod.CLIP_SHAPE
-    try:
-        for a in aois:
-            clipmod.CLIP_SHAPE = "union"
-            want = canon(df)
-            clipmod.CLIP_SHAPE = "fused"
-            got = canon(df)
-            assert got == want and len(want) > 0
-    finally:
-        clipmod.CLIP_SHAPE = old
+    for a in aois:
+        want = _canon(_clip_oracle(rows, a))
+        assert want
+        assert _canon(clip_features(df, a).collect()) == want

@@ -1,10 +1,9 @@
 """Lineage-truncation helpers (lineage.py) + the checkpoint= variants
-of assemble/clip/export: the checkpointed pipeline must produce
+of assemble/export: the checkpointed pipeline must produce
 byte-identical results to the persisted one, and `release` must free
 the checkpointed RDD storage (a plain DataFrame.unpersist() no-ops on
 a localCheckpoint, which would leak its partitions session-long)."""
 
-import numpy as np
 import pytest
 
 from osm_export_tool_python_spark import lineage
@@ -52,25 +51,6 @@ def test_assemble_checkpoint_matches_persist(spark):
         *persisted._persisted_intermediates, *ckpt._persisted_intermediates
     )
     assert _n_cached_rdds(spark) <= before - len(ckpt._persisted_intermediates)
-
-
-def test_clip_checkpoint_matches_persist(spark):
-    from osm_export_tool_python_spark.operators import assemble
-    from osm_export_tool_python_spark.operators.clip import AOI, clip_features
-    from osm_export_tool_python_spark.sources import decode, synth
-
-    docs = decode.with_entity_meta(
-        synth.synthesize(spark, n_nodes=400, n_ways=120, n_rels=12)
-    )
-    feats = assemble.assemble_features(docs)
-    aoi = AOI([np.array([[-5.0, -5.0], [20.0, -5.0], [20.0, 30.0], [-5.0, 30.0]])])
-    a = clip_features(feats, aoi, persist=True)
-    b = clip_features(feats, aoi, checkpoint=True)
-    cols = ["src", "osm_id", "geom_type", "xs", "ys"]
-    ra = sorted(map(repr, a.select(*cols).collect()))
-    rb = sorted(map(repr, b.select(*cols).collect()))
-    assert ra == rb and len(ra) > 0
-    lineage.release(*a._persisted_intermediates, *b._persisted_intermediates)
 
 
 def test_export_checkpoint_same_manifest_metrics(spark, tmp_path):

@@ -93,11 +93,8 @@ def test_knn_join_is_fully_jvm_side(spark):
 
 def test_decode_entities_no_rowwise_python(spark, tmp_path):
     """The one-pass entities decode: span filters/tags are pure Column;
-    the WKB point decode is the ONE vectorized Arrow stage (r6 default
-    — the numpy unhexlify/frombuffer decoder measured 2-4× faster than
-    the conv-based Column reconstruction at every width tried, see
-    decode.WKB_DECODE_JVM).  No row-at-a-time Python anywhere; with
-    the JVM decoder pinned, no Python at all."""
+    the WKB point decode is the ONE vectorized Arrow stage (see
+    decode.wkb_point_decode).  No row-at-a-time Python anywhere."""
     from osm_export_tool_python_spark.sources import decode, synth
 
     p = str(tmp_path / "docs")
@@ -106,14 +103,6 @@ def test_decode_entities_no_rowwise_python(spark, tmp_path):
     plan = _plan(q)
     assert "BatchEvalPython" not in plan
     assert plan.count("ArrowEvalPython") <= 1
-    old = decode.WKB_DECODE_JVM
-    try:
-        decode.WKB_DECODE_JVM = True
-        q = decode.entities_table(decode.with_entity_meta(spark.read.parquet(p)))
-        plan = _plan(q)
-        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    finally:
-        decode.WKB_DECODE_JVM = old
 
 
 def test_rect_aoi_classify_is_fully_jvm_side(spark, tmp_path):
@@ -211,46 +200,6 @@ def test_exact_tile_assignment_default_fused_shape(spark):
     out = with_tile_cells_exact(df, 4, 6)
     plan = _plan(out)
     assert "Union" not in plan  # one scan, no second branch
-    assert "BatchEvalPython" not in plan  # Arrow-vectorized only
-    assert plan.count("ArrowEvalPython") == 1
-
-
-def test_exact_tile_assignment_union_shape(spark):
-    """split=True keeps the r5 union shape: the Arrow kernel sits
-    behind a Filter so it sees only the straddler subset, the
-    single-tile branch is pure codegen'd Column work (no Python)."""
-    from osm_export_tool_python_spark.operators.assemble import FEATURE_SCHEMA
-    from osm_export_tool_python_spark.operators.tiles import with_tile_cells_exact
-
-    rows = [
-        (1, "node", "point", {"a": "1"}, [13.4], [52.5], [0, 1], [0, 1]),
-        (2, "way", "line", {"a": "1"}, [-20.3, 31.7], [10.1, 44.9], [0, 2], [0, 1]),
-    ]
-    df = spark.createDataFrame(rows, FEATURE_SCHEMA)
-    out = with_tile_cells_exact(df, 4, 6, split=True)
-    plan = _plan(out)
-    assert "Union" in plan
-    assert "BatchEvalPython" not in plan  # Arrow-vectorized only
-    assert plan.count("ArrowEvalPython") == 1
-    # the kernel branch is filtered BEFORE the Arrow node
-    assert "Filter" in plan[plan.index("ArrowEvalPython"):]
-
-
-def test_exact_tile_assignment_case_shape_single_pass(spark):
-    """split=False keeps the one-scan CASE shape (for inputs with no
-    reuse point upstream): no Union, exactly one Arrow Python stage
-    fed NULLs for thin rows, no row-at-a-time Python."""
-    from osm_export_tool_python_spark.operators.assemble import FEATURE_SCHEMA
-    from osm_export_tool_python_spark.operators.tiles import with_tile_cells_exact
-
-    rows = [
-        (1, "node", "point", {"a": "1"}, [13.4], [52.5], [0, 1], [0, 1]),
-        (2, "way", "line", {"a": "1"}, [-20.3, 31.7], [10.1, 44.9], [0, 2], [0, 1]),
-    ]
-    df = spark.createDataFrame(rows, FEATURE_SCHEMA)
-    out = with_tile_cells_exact(df, 4, 6, split=False)
-    plan = _plan(out)
-    assert "Union" not in plan
     assert "BatchEvalPython" not in plan  # Arrow-vectorized only
     assert plan.count("ArrowEvalPython") == 1
 

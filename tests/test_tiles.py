@@ -1,6 +1,8 @@
 """Tile assignment: bbox covers, golden point assignments, salted
 packing equivalence, JVM-side cell decode parity."""
 
+from collections import Counter
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -8,10 +10,10 @@ from osm_export_tool_python_spark.functions.cells import cell_decode, cell_encod
 from osm_export_tool_python_spark.operators.assemble import FEATURE_SCHEMA
 from osm_export_tool_python_spark.operators.tiles import (
     decode_cell_cols,
-    point_tile_assignment,
     tile_counts,
     tile_features,
     with_tile_cells,
+    with_tile_cells_exact,
 )
 
 
@@ -27,7 +29,13 @@ def _line(osm_id, coords):
 
 def test_point_assignment_golden(spark):
     df = spark.createDataFrame([_pt(1, 0.02435, 51.51202)], FEATURE_SCHEMA)
-    out = point_tile_assignment(df, 17).select(decode_cell_cols("cell")).select("c.*").collect()
+    out = (
+        with_tile_cells_exact(df, 17, 17)
+        .select(decode_cell_cols("cell"))
+        .select("c.*")
+        .collect()
+    )
+    assert len(out) == 1
     assert (out[0]["z"], out[0]["x"], out[0]["y"]) == (17, 65544, 43582)
 
 
@@ -128,10 +136,7 @@ from osm_export_tool_python_spark.functions.geomkernel import (  # noqa: E402
     points_in_rings,
     segment_intersects_rect,
 )
-from osm_export_tool_python_spark.operators.tiles import (  # noqa: E402
-    exact_cells_batch,
-    with_tile_cells_exact,
-)
+from osm_export_tool_python_spark.operators.tiles import exact_cells_batch  # noqa: E402
 
 
 def _brute_tiles(geom_type, xs, ys, ring_offsets, z):
@@ -425,22 +430,43 @@ def test_null_geom_type_straddler_still_assigned(spark):
     assert by_id[1] == by_id[2]  # same tiles as the identical line
 
 
-def _collect_cells(df, min_z, max_z, strip):
-    out = with_tile_cells_exact(df, min_z, max_z, strip=strip).select(
-        "osm_id", "cell"
-    ).collect()
-    by_id = {}
-    for r in out:
-        by_id.setdefault(r["osm_id"], set()).add(r["cell"])
-    return by_id
+def _collect_rows(df, min_z, max_z):
+    """(osm_id, cell) multiset of the Spark exact assignment."""
+    return Counter(
+        (r["osm_id"], r["cell"])
+        for r in with_tile_cells_exact(df, min_z, max_z)
+        .select("osm_id", "cell")
+        .collect()
+    )
+
+
+def _oracle_rows(rows, min_z, max_z):
+    """The same multiset from `exact_cells_batch` run locally over
+    EVERY row (FEATURE_SCHEMA tuples) — no single-tile Column route."""
+    cells = exact_cells_batch(
+        ["" if r[2] is None else r[2] for r in rows],
+        [np.asarray(r[4], np.float64) for r in rows],
+        [np.asarray(r[5], np.float64) for r in rows],
+        [r[6] for r in rows],
+        min_z,
+        max_z,
+    )
+    return Counter(
+        (r[0], int(c)) for r, cs in zip(rows, cells) for c in cs.tolist()
+    )
+
+
+def _assert_matches_oracle(spark, rows, min_z, max_z):
+    got = _collect_rows(spark.createDataFrame(rows, FEATURE_SCHEMA), min_z, max_z)
+    assert got == _oracle_rows(rows, min_z, max_z)
+    return got
 
 
 def test_strip_routing_matches_kernel_fuzz(spark):
-    """The 1xN / Nx1 pure-Column strip fast path must produce exactly
-    the kernel's tile sets: random single-part polylines and polygon
-    rings shaped to span several tiles along ONE axis (the dominant
-    straddler class), mixed with corner-straddlers and big diagonals
-    that stay on the kernel path either way."""
+    """Strip-shaped features — random single-part polylines and polygon
+    rings spanning several tiles along ONE axis (the dominant
+    straddler class on real corpora), mixed with corner-straddlers and
+    big diagonals — get exactly the kernel's tile sets."""
     rng = np.random.default_rng(77)
     rows = []
     osm_id = 0
@@ -455,8 +481,8 @@ def test_strip_routing_matches_kernel_fuzz(spark):
         rows.append((osm_id, "way", "line", {"a": "1"}, xs.tolist(),
                      ys.tolist(), [0, int(npts)], [0, 1]))
         osm_id += 1
-        # vertical-ish strip polygon ring (unclosed: kernel adds the
-        # closing segment; the strip argument is closure-independent)
+        # vertical-ish strip polygon ring (unclosed: the kernel adds the
+        # closing segment)
         lon0 = rng.uniform(-170, 160)
         lat0 = rng.uniform(-70, 65)
         h = rng.uniform(2, 5)
@@ -466,64 +492,46 @@ def test_strip_routing_matches_kernel_fuzz(spark):
         rows.append((osm_id, "rel", "polygon", {"a": "1"}, ring_x, ring_y,
                      [0, 4], [0, 1]))
         osm_id += 1
-        # corner-straddler / diagonal (kernel path both modes)
+        # corner-straddler / diagonal
         lon0 = rng.uniform(-170, 160)
         lat0 = rng.uniform(-70, 60)
         d = rng.uniform(2, 8)
         rows.append((osm_id, "way", "line", {"a": "1"},
                      [lon0, lon0 + d], [lat0, lat0 + d], [0, 2], [0, 1]))
-    df = spark.createDataFrame(rows, FEATURE_SCHEMA)
-    with_strip = _collect_cells(df, 4, 8, strip=True)
-    no_strip = _collect_cells(df, 4, 8, strip=False)
-    assert with_strip == no_strip
+    _assert_matches_oracle(spark, rows, 4, 8)
 
 
 def test_strip_multipart_disconnected_not_bbox_covered(spark):
     """A MULTI-part line whose parts sit at opposite ends of a 1xN
-    bbox must keep its gap tiles: the strip fast path requires a
-    single part, so this row must route to the kernel, whose exact set
-    excludes the middle tiles the bbox cover would wrongly include."""
+    bbox keeps its gap tiles: the exact set excludes the middle tiles
+    the bbox cover would wrongly include."""
     # two short segments ~5 degrees apart at the same latitude
     xs = [10.1, 10.2, 15.3, 15.4]
     ys = [0.21, 0.22, 0.21, 0.22]
     rows = [(1, "way", "line", {"a": "1"}, xs, ys, [0, 2, 4], [0, 2])]
-    df = spark.createDataFrame(rows, FEATURE_SCHEMA)
-    got = _collect_cells(df, 8, 8, strip=True)[1]
-    assert got == _collect_cells(df, 8, 8, strip=False)[1]
+    got = {cell for _, cell in _assert_matches_oracle(spark, rows, 8, 8)}
     # and the gap is real: strictly fewer tiles than the bbox cover
+    df = spark.createDataFrame(rows, FEATURE_SCHEMA)
     bbox = {r["cell"] for r in with_tile_cells(df, 8, 8).collect()}
     assert got < bbox
 
 
 def test_strip_antimeridian_guard(spark):
     """A Fiji-style wrapped way has a 1-row bbox spanning nearly the
-    whole world: the lon-span guard must keep it OFF the strip path so
-    it still resolves to the two short arcs, not the bbox band."""
+    whole world: it still resolves to the two short arcs, not the bbox
+    band."""
     rows = [(1, "way", "line", {"a": "1"}, [179.5, -179.5],
              [10.1, 10.2], [0, 2], [0, 1])]
-    df = spark.createDataFrame(rows, FEATURE_SCHEMA)
-    got = _collect_cells(df, 6, 6, strip=True)[1]
-    assert got == _collect_cells(df, 6, 6, strip=False)[1]
+    got = _assert_matches_oracle(spark, rows, 6, 6)
     assert len(got) <= 4  # short arcs at z6, not a world-wide band
 
 
-def _collect_rows(df, min_z, max_z, split):
-    from collections import Counter
-
-    return Counter(
-        (r["osm_id"], r["cell"])
-        for r in with_tile_cells_exact(df, min_z, max_z, split=split)
-        .select("osm_id", "cell")
-        .collect()
-    )
-
-
-def test_union_shape_matches_case_shape_fuzz(spark):
-    """split=True (union shape: kernel UDF over the filtered straddler
-    subset only) must produce exactly the CASE shape's rows — same
-    (osm_id, cell) multiset — on a mixed corpus: points, sub-tile
-    ways, strips, diagonals, donut polygons, a NULL-geom_type
-    straddler, and an empty-geometry row."""
+def test_exact_assignment_matches_kernel_oracle_fuzz(spark):
+    """The exact assignment (single-tile rows on the Column route,
+    everything else on the kernel) produces exactly the kernel's
+    (osm_id, cell) multiset run locally over every row, on a mixed
+    corpus: points, sub-tile ways, diagonals, polygon rings and a
+    NULL-geom_type straddler."""
     rng = np.random.default_rng(101)
     rows = []
     osm_id = 0
@@ -548,19 +556,26 @@ def test_union_shape_matches_case_shape_fuzz(spark):
              [lon0, lon0 + w, lon0 + w, lon0],
              [lat0, lat0, lat0 + h, lat0 + h], [0, 4], [0, 1])
         )
-    # NULL geom_type straddler (must reach the kernel in both shapes)
+    # NULL geom_type straddler (must reach the kernel)
     osm_id += 1
     rows.append((osm_id, "way", None, {"a": "1"},
                  [-20.3, 31.7], [10.1, 44.9], [0, 2], [0, 1]))
-    df = spark.createDataFrame(rows, FEATURE_SCHEMA)
-    case_rows = _collect_rows(df, 4, 8, split=False)
-    assert _collect_rows(df, 4, 8, split=True) == case_rows
-    # the r6 FUSED default must reproduce the same multiset too
-    assert _collect_rows(df, 4, 8, split="fused") == case_rows
+    _assert_matches_oracle(spark, rows, 4, 8)
+
+
+def test_tile_counts_rejects_strip(spark):
+    """`strip` survives on tile_counts only as an explicit False; the
+    removed strip route cannot be selected."""
+    import pytest
+
+    df = spark.createDataFrame([_line(1, [(10.0, 20.0), (10.5, 20.0)])], FEATURE_SCHEMA)
+    with pytest.raises(ValueError):
+        tile_counts(df, 6, 6, strip=True)
+    assert tile_counts(df, 6, 6, strip=False).count() > 0
 
 
 def test_fused_shape_single_scan_plan(spark):
-    """The fused default's plan: no Union (one scan), exactly one
+    """The exact assignment's plan: no Union (one scan), exactly one
     ArrowEvalPython whose inputs are NULLed for single-tile rows."""
     rows = [_pt(1, 10.0, 20.0), _line(2, [(-20.3, 10.1), (31.7, 44.9)])]
     df = spark.createDataFrame(rows, FEATURE_SCHEMA)
@@ -569,38 +584,3 @@ def test_fused_shape_single_scan_plan(spark):
     assert plan.count("ArrowEvalPython") == 1
     assert "BatchEvalPython" not in plan
     assert "Union" not in plan
-
-
-def test_strip_under_default_shape_warns(spark):
-    """strip=True is only honored by the CASE shape; asking for it
-    under the fused/union shapes warns (VERDICT r5 wart: the knob was
-    silently ignored) and still returns the exact cell set."""
-    import warnings
-
-    rows = [_line(1, [(10.0, 20.0), (10.5, 20.0)])]
-    df = spark.createDataFrame(rows, FEATURE_SCHEMA)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        out = with_tile_cells_exact(df, 6, 6, strip=True)
-        out.collect()
-    assert any("strip" in str(x.message) for x in w)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        with_tile_cells_exact(df, 6, 6, strip=True, split=False).collect()
-    assert not any("strip" in str(x.message) for x in w)
-
-
-def test_union_shape_single_arrow_node_over_subset(spark):
-    """The union shape's plan: exactly one ArrowEvalPython, fed by a
-    Filter (the straddler subset) — the single-tile branch never
-    touches Python."""
-    rows = [_pt(1, 10.0, 20.0), _line(2, [(-20.3, 10.1), (31.7, 44.9)])]
-    df = spark.createDataFrame(rows, FEATURE_SCHEMA)
-    out = with_tile_cells_exact(df, 4, 6, split=True)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1
-    assert "BatchEvalPython" not in plan
-    assert "Union" in plan
-    # kernel branch input is filtered BEFORE the Arrow node
-    arrow_at = plan.index("ArrowEvalPython")
-    assert "Filter" in plan[arrow_at:], plan
