@@ -153,7 +153,6 @@ def test_compact_mode_small_ways_full_coverage(spark):
     block-cyclic Z-curve mapping; a naive curve_index=id packs all ids
     into one corner and corpus geography becomes a function of N)."""
     from osm_export_tool_python_spark.operators import assemble
-    from osm_export_tool_python_spark.operators.tiles import routing_class_counts
     from osm_export_tool_python_spark.sources.synth import LAT_RANGE, LON_RANGE
 
     docs = synth.synthesize(spark, n_nodes=20000, n_ways=5000, n_rels=100,
@@ -178,7 +177,40 @@ def test_compact_mode_small_ways_full_coverage(spark):
                                  compact=True)
     assert lon.max() - lon.min() > 0.8 * (LON_RANGE[1] - LON_RANGE[0])
     assert lat.max() - lat.min() > 0.8 * (LAT_RANGE[1] - LAT_RANGE[0])
-    # small ways mostly fit one z12 tile: the single-tile Column route
-    # carries more rows than the kernel
+
+
+def test_compact_mode_strip_routing_dominates_straddlers(spark):
+    """On the compact corpus the 1xN/Nx1 strip class must dominate the
+    straddler population (edge-straddling is ~linear in feature size,
+    corner-straddling ~quadratic), and single-tile rows must outnumber
+    all straddlers — the regression guard for the corpus having
+    realistic feature scales at z12.  Strips and corner-straddlers both
+    take the kernel route, so the two classes sum to its row count."""
+    from osm_export_tool_python_spark.operators import assemble
+    from osm_export_tool_python_spark.operators.tiles import (
+        routing_class_counts,
+        tile_x_col,
+        tile_y_col,
+    )
+
+    docs = synth.synthesize(spark, n_nodes=20000, n_ways=5000, n_rels=100,
+                            compact=True)
+    feats = assemble.assemble_features(decode.with_entity_meta(docs))
     rc = routing_class_counts(feats, 12)
+
+    z = F.lit(12)
+    nx = tile_x_col(F.array_max("xs"), z) - tile_x_col(F.array_min("xs"), z)
+    ny = tile_y_col(F.array_min("ys"), z) - tile_y_col(F.array_max("ys"), z)
+    straddlers = feats.where(
+        (F.col("geom_type").isNull() | (F.col("geom_type") != "point"))
+        & ((nx != 0) | (ny != 0))
+    )
+    row = straddlers.select(
+        F.sum(F.when((nx == 0) | (ny == 0), 1).otherwise(0)).alias("strip"),
+        F.sum(F.when((nx != 0) & (ny != 0), 1).otherwise(0)).alias("corner"),
+    ).collect()[0]
+    strip, corner = int(row["strip"] or 0), int(row["corner"] or 0)
+    assert strip + corner == rc["kernel"], (strip, corner, rc)
+    assert strip > 0
+    assert strip > corner, (strip, corner)
     assert rc["single"] > rc["kernel"], rc
