@@ -563,8 +563,7 @@ def rademacher_sketch_col(vec_col, dim: int, n_planes: int = 8):
     is sign(<v, plane_j>) with deterministic ±1 planes.  No Python
     crossing — the ±1 products are compile-time literals, so the whole
     sketch is one codegen'd expression; at 10^12 vectors this keeps
-    the bucketing stage entirely JVM-side (the numpy-UDF variant in
-    embedding_near_dup_pairs exists for arbitrary Gaussian planes).
+    the bucketing stage entirely JVM-side.
     Terms accumulate left-to-right, matching DuckDB list_sum order —
     bit-identical dots, so bucket assignment is oracle-checkable."""
     v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
@@ -635,8 +634,10 @@ def embedding_near_dup_pairs_col(
     threshold: float = 0.95,
     n_planes: int = 8,
 ) -> DataFrame:
-    """embedding_near_dup_pairs with the deterministic pure-Column
-    Rademacher sketch — the oracle-checkable / fully-JVM variant."""
+    """Near-duplicate vectors by cosine ≥ threshold.  Random-hyperplane
+    LSH bucket join on the deterministic pure-Column Rademacher sign
+    sketch, multi-probed over every single-bit flip, then exact cosine
+    verify — oracle-checkable and fully JVM-side."""
     if dim is None:
         row = df.select(F.size(vec_col).alias("d")).first()
         if row is None:  # empty input → empty pair set, correctly typed
@@ -648,47 +649,6 @@ def embedding_near_dup_pairs_col(
         dim = int(row["d"])
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).withColumn(
         "sk", rademacher_sketch_col("v", dim, n_planes)
-    )
-    return _multiprobe_verify(base, n_planes, threshold)
-
-
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Near-duplicate vectors by cosine ≥ threshold.  Random-hyperplane
-    LSH bucket join (sign sketch) + exact cosine verify; vectors whose
-    sketches differ in 0 of n_planes bits land in the same bucket.
-    To not miss boundary pairs, joins on each of the n_planes
-    single-bit-flipped sketches too (multi-probe)."""
-    import numpy as np
-    import pandas as pd
-
-    globals()["pd"] = pd
-    from pyspark.sql.functions import pandas_udf
-
-    dim_row = df.select(F.size(vec_col).alias("d")).first()
-    dim = int(dim_row["d"])
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-    bplanes = df.sparkSession.sparkContext.broadcast(planes)
-
-    @pandas_udf("long")
-    def sketch(vecs: pd.Series) -> pd.Series:
-        p = bplanes.value
-        m = np.stack(vecs.to_numpy())
-        signs = (m @ p.T) > 0
-        out = np.zeros(len(m), dtype=np.int64)
-        for j in range(p.shape[0]):
-            out |= signs[:, j].astype(np.int64) << j
-        return pd.Series(out)
-
-    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).withColumn(
-        "sk", sketch(F.col("v"))
     )
     return _multiprobe_verify(base, n_planes, threshold)
 

@@ -1277,11 +1277,15 @@ def q_osm_way_assembly(spark, sf_dir):
         )
     )
     docs = node_docs.unionByName(way_docs)
-    meta = decode.with_entity_meta(docs)
+    # decoded once, as the export does: the projections then read the
+    # stored rows instead of each re-running the node docs' WKB encode
+    ent = decode.entities_table(decode.with_entity_meta(docs)).localCheckpoint()
     from ..operators.assemble import way_coords
 
     wc = way_coords(
-        decode.way_refs_table(meta), decode.nodes_table(meta), decode.ways_table(meta)
+        decode.way_refs_from_entities(ent),
+        decode.nodes_from_entities(ent),
+        decode.ways_from_entities(ent),
     )
     # planar path length in degrees (|dx|+|dy| per hop) — fp-stable
     seg = F.zip_with(
@@ -1484,11 +1488,13 @@ def q_osm_relation_assembly(spark, sf_dir):
     )
 
     docs = node_docs.unionByName(way_docs).unionByName(rel_docs)
-    meta = decode.with_entity_meta(docs)
+    ent = decode.entities_table(decode.with_entity_meta(docs)).localCheckpoint()
     wc = way_coords(
-        decode.way_refs_table(meta), decode.nodes_table(meta), decode.ways_table(meta)
+        decode.way_refs_from_entities(ent),
+        decode.nodes_from_entities(ent),
+        decode.ways_from_entities(ent),
     )
-    feats = relation_polygon_features(decode.rel_members_table(meta), wc)
+    feats = relation_polygon_features(decode.rel_members_from_entities(ent), wc)
 
     # net covered area via hole-signed shoelace, all in Column math:
     # ring ri is an OUTER iff its index appears in part_offsets
@@ -2774,9 +2780,8 @@ def q_osm_sargable_scan(spark, sf_dir):
         "  where: amenity IN ('school', 'cafe')\n"
     )
     cand = read_theme_candidates(spark, path, mapping)
-    pts = theme_fanout(
-        point_features(decode.nodes_table(decode.with_entity_meta(cand))), mapping
-    )
+    ent = decode.entities_table(decode.with_entity_meta(cand))
+    pts = theme_fanout(point_features(decode.nodes_from_entities(ent)), mapping)
     return pts.select(
         "osm_id",
         F.try_element_at("tags", F.lit("amenity")).alias("amenity"),

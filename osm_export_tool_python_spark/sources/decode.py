@@ -7,10 +7,13 @@ of the documents table followed by a *pure-Column* decode projection —
 inside Catalyst/codegen.  The only Python crossing is the vectorized
 WKB-point hex decoder (numpy frombuffer over a whole Arrow batch).
 
+``entities_table`` is the one decoder: nodes, ways, way refs and
+relation members are ``*_from_entities`` projections of it.
+
 Loss-free contract: ``reencode_spans`` reconstructs the span sequence
-from the decoded columns; per-row equality with the original array
-(kind, text, media_ref, order) is the input_hint invariant, tested in
-tests/test_synth_decode.py.
+from ``entities_table``'s columns; per-row equality with the original
+array (kind, text, media_ref, order) is the input_hint invariant,
+tested in tests/test_synth_decode.py.
 """
 
 from __future__ import annotations
@@ -120,18 +123,10 @@ def wkb_point_decode(col):
     return _UDF_CACHE["decode"](col)
 
 
-def entities_table(docs_meta: DataFrame) -> DataFrame:
-    """ONE-PASS decode of every entity kind into a narrow frame:
-
-        src, orig_id, tags,
-        lon, lat                       (nodes)
-        ref_ids, n_refs, is_closed     (ways)
-        member_roles, member_way_ids   (relations)
-
-    This is the scan-economy keystone at 100 TB: the wide `spans`
-    payload is read ONCE; downstream tables (nodes_table / ways /
-    refs / members) are cheap projections of this frame, so persisting
-    it turns the assembly pipeline's five full-table scans into one."""
+def _entity_columns():
+    """The decoded entity columns, one filter per span kind.  Shared by
+    `entities_table` and `reencode_spans`, so the loss-free check reads
+    exactly the columns the export decodes."""
     spans = _spans_sorted()
     media = F.try_element_at(
         F.filter(spans, lambda s: s.kind == F.lit("media")), F.lit(1)
@@ -144,7 +139,7 @@ def entities_table(docs_meta: DataFrame) -> DataFrame:
     first = F.try_element_at(refs, F.lit(1)).media_ref
     last = F.try_element_at(refs, F.lit(-1)).media_ref
     pt = wkb_point_decode(media.media_ref)
-    return docs_meta.select(
+    return [
         "src",
         "orig_id",
         "tags",
@@ -167,7 +162,23 @@ def entities_table(docs_meta: DataFrame) -> DataFrame:
                 lambda s: F.split_part(s.media_ref, F.lit("/"), F.lit(2)).cast("long"),
             ),
         ).alias("member_way_ids"),
-    )
+    ]
+
+
+def entities_table(docs_meta: DataFrame) -> DataFrame:
+    """ONE-PASS decode of every entity kind into a narrow frame:
+
+        src, orig_id, tags,
+        lon, lat                       (nodes)
+        ref_ids, n_refs, is_closed     (ways)
+        member_roles, member_way_ids   (relations)
+
+    This is the only span decoder: every consumer reads it through the
+    `*_from_entities` projections below.  The wide `spans` payload is
+    read ONCE, so persisting this frame turns the assembly pipeline's
+    five full-table scans into one; an unpersisted projection keeps
+    only the columns it needs (the WKB crossing only under nodes)."""
+    return docs_meta.select(*_entity_columns())
 
 
 def nodes_from_entities(entities: DataFrame) -> DataFrame:
@@ -209,73 +220,6 @@ def rel_members_from_entities(entities: DataFrame) -> DataFrame:
     )
 
 
-def nodes_table(docs_meta: DataFrame) -> DataFrame:
-    """(node_id, tags, lon, lat) — every node, tagged or not (untagged
-    nodes still anchor way geometry, reference location index)."""
-    media = F.try_element_at(
-        F.filter(_spans_sorted(), lambda s: s.kind == F.lit("media")), F.lit(1)
-    )
-    df = docs_meta.where(F.col("src") == "node").select(
-        F.col("orig_id").alias("node_id"),
-        "tags",
-        wkb_point_decode(media.media_ref).alias("pt"),
-    )
-    return df.select("node_id", "tags", F.col("pt.lon").alias("lon"), F.col("pt.lat").alias("lat"))
-
-
-def way_refs_table(docs_meta: DataFrame) -> DataFrame:
-    """(way_id, seq, node_id) — the explicit form of osmium's node
-    location index (reference cmd.py:58 locations=True)."""
-    refs = F.filter(_spans_sorted(), lambda s: s.kind == F.lit("ref"))
-    ref_ids = F.transform(
-        refs, lambda s: F.split_part(s.media_ref, F.lit("/"), F.lit(2)).cast("long")
-    )
-    return (
-        docs_meta.where(F.col("src") == "way")
-        .select(F.col("orig_id").alias("way_id"), F.posexplode(ref_ids).alias("seq", "node_id"))
-    )
-
-
-def ways_table(docs_meta: DataFrame) -> DataFrame:
-    """(way_id, tags, n_refs, is_closed)."""
-    refs = F.filter(_spans_sorted(), lambda s: s.kind == F.lit("ref"))
-    first = F.try_element_at(refs, F.lit(1)).media_ref
-    last = F.try_element_at(refs, F.lit(-1)).media_ref
-    return docs_meta.where(F.col("src") == "way").select(
-        F.col("orig_id").alias("way_id"),
-        "tags",
-        F.size(refs).alias("n_refs"),
-        # osmium semantics: closed iff first==last (length-independent)
-        F.coalesce(first == last, F.lit(False)).alias("is_closed"),
-    )
-
-
-def rel_members_table(docs_meta: DataFrame) -> DataFrame:
-    """(rel_id, member_seq, role, way_id) for type=multipolygon relations."""
-    members = F.filter(_spans_sorted(), lambda s: s.kind == F.lit("member"))
-    entries = F.transform(
-        members,
-        lambda s: F.struct(
-            s.text.alias("role"),
-            F.split_part(s.media_ref, F.lit("/"), F.lit(2)).cast("long").alias("way_id"),
-        ),
-    )
-    return (
-        docs_meta.where(
-            (F.col("src") == "rel")
-            & (F.try_element_at("tags", F.lit("type")) == "multipolygon")
-        )
-        .select(F.col("orig_id").alias("rel_id"), "tags", F.posexplode(entries).alias("member_seq", "m"))
-        .select("rel_id", "tags", "member_seq", F.col("m.role").alias("role"), F.col("m.way_id").alias("way_id"))
-    )
-
-
-def rels_table(docs_meta: DataFrame) -> DataFrame:
-    return docs_meta.where(F.col("src") == "rel").select(
-        F.col("orig_id").alias("rel_id"), "tags"
-    )
-
-
 def wkb_point_encode(lon_col, lat_col):
     """Inverse of wkb_point_decode — vectorized lon/lat → WKB hex."""
     if "encode" not in _UDF_CACHE:
@@ -294,63 +238,48 @@ def wkb_point_encode(lon_col, lat_col):
 
 
 def reencode_spans(docs_meta: DataFrame) -> DataFrame:
-    """Rebuild each document's span sequence FROM the decoded typed
-    columns (tags map, ref/member targets, re-encoded WKB from decoded
-    lon/lat) to prove decode is loss-free — the input_hint's per-row
-    span-sequence (kind, text, media_ref, order) equality invariant.
+    """Rebuild each document's span sequence FROM the decoded entity
+    columns (tags map, ref_ids, member roles/way ids, re-encoded WKB
+    from the decoded lon/lat) to prove decode is loss-free — the
+    input_hint's per-row span-sequence (kind, text, media_ref, order)
+    equality invariant.  The columns are `entities_table`'s own, so a
+    span the export would drop or garble breaks the equality.
 
     Relies on Spark maps preserving entry order (they are stored as
     paired arrays), which map_from_entries/map_entries guarantee."""
-    spans = _spans_sorted()
+    empty = F.array().cast("array<struct<kind:string,text:string,media_ref:string>>")
+
+    def span(kind, text, media_ref):
+        return F.struct(
+            F.lit(kind).alias("kind"), text.alias("text"), media_ref.alias("media_ref")
+        )
+
     tag_spans = F.transform(
         F.map_entries("tags"),
-        lambda e: F.struct(
-            F.lit("tag").alias("kind"),
-            F.concat(e.key, F.lit("="), e.value).alias("text"),
-            F.lit("").alias("media_ref"),
-        ),
+        lambda e: span("tag", F.concat(e.key, F.lit("="), e.value), F.lit("")),
     )
-    refs = F.filter(spans, lambda s: s.kind == F.lit("ref"))
     ref_spans = F.transform(
-        F.transform(refs, lambda s: F.split_part(s.media_ref, F.lit("/"), F.lit(2)).cast("long")),
-        lambda nid: F.struct(
-            F.lit("ref").alias("kind"),
-            F.lit("").alias("text"),
-            F.concat(F.lit("node/"), nid.cast("string")).alias("media_ref"),
-        ),
+        "ref_ids",
+        lambda nid: span("ref", F.lit(""), F.concat(F.lit("node/"), nid.cast("string"))),
     )
-    members = F.filter(spans, lambda s: s.kind == F.lit("member"))
-    member_spans = F.transform(
-        members,
-        lambda s: F.struct(
-            F.lit("member").alias("kind"),
-            s.text.alias("text"),
-            F.concat(
-                F.lit("way/"),
-                F.split_part(s.media_ref, F.lit("/"), F.lit(2)).cast("long").cast("string"),
-            ).alias("media_ref"),
-        ),
+    member_spans = F.zip_with(
+        "member_roles",
+        "member_way_ids",
+        lambda r, w: span("member", r, F.concat(F.lit("way/"), w.cast("string"))),
     )
-    media = F.try_element_at(F.filter(spans, lambda s: s.kind == F.lit("media")), F.lit(1))
-    pt = wkb_point_decode(media.media_ref)
     media_spans = F.when(
         F.col("src") == "node",
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("point").alias("text"),
-                wkb_point_encode(pt.lon, pt.lat).alias("media_ref"),
-            )
-        ),
-    ).otherwise(F.array().cast("array<struct<kind:string,text:string,media_ref:string>>"))
-
-    rebuilt = F.concat(tag_spans, ref_spans, member_spans, media_spans)
+        F.array(span("media", F.lit("point"), wkb_point_encode(F.col("lon"), F.col("lat")))),
+    )
+    rebuilt = F.concat(
+        *[F.coalesce(a, empty) for a in (tag_spans, ref_spans, member_spans, media_spans)]
+    )
     original = F.transform(
-        spans,
+        _spans_sorted(),
         lambda s: F.struct(
             s.kind.alias("kind"), s.text.alias("text"), s.media_ref.alias("media_ref")
         ),
     )
-    return docs_meta.select(
+    return docs_meta.select("doc_id", "spans", *_entity_columns()).select(
         "doc_id", original.alias("original"), rebuilt.alias("rebuilt")
     )

@@ -61,22 +61,14 @@ def incremental_point_features(
     mapping's select keys as NULL-padded top-level columns (the batch
     `theme_output` row shape, reference tabular.py:71-79), so the
     streamed sink is directly consumable without the tags map."""
+    from ..operators.assemble import point_features
     from ..operators.themes import theme_fanout
     from ..sources import decode
 
-    meta = decode.with_entity_meta(doc_stream)
-    nodes = decode.nodes_table(meta).where(F.size("tags") > 0)
-    feats = nodes.select(
-        F.col("node_id").alias("osm_id"),
-        F.lit("node").alias("src"),
-        F.lit("point").alias("geom_type"),
-        "tags",
-        F.array("lon").alias("xs"),
-        F.array("lat").alias("ys"),
-        F.array(F.lit(0), F.lit(1)).cast("array<int>").alias("ring_offsets"),
-        F.array(F.lit(0), F.lit(1)).cast("array<int>").alias("part_offsets"),
+    nodes = decode.nodes_from_entities(
+        decode.entities_table(decode.with_entity_meta(doc_stream))
     )
-    themed = theme_fanout(feats, mapping)
+    themed = theme_fanout(point_features(nodes), mapping)
     if select_keys:
         keys = sorted({k for t in mapping.themes for k in t.keys})
         taken = set(themed.columns)

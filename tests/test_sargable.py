@@ -170,8 +170,8 @@ def test_point_export_equality_over_candidates(spark, tmp_path_factory):
     from osm_export_tool_python_spark.operators.themes import theme_fanout
 
     def themed_points(frame):
-        meta = decode.with_entity_meta(frame)
-        out = theme_fanout(point_features(decode.nodes_table(meta)), mapping)
+        ent = decode.entities_table(decode.with_entity_meta(frame))
+        out = theme_fanout(point_features(decode.nodes_from_entities(ent)), mapping)
         return sorted(
             (r["osm_id"], r["theme"], r["tags"]["amenity"]) for r in out.collect()
         )

@@ -42,16 +42,18 @@ def test_incremental_export_and_resume(spark, tmp_path_factory):
     from osm_export_tool_python_spark.sources import decode
     from osm_export_tool_python_spark.operators.assemble import point_features
 
-    meta = decode.with_entity_meta(spark.read.parquet(in_dir))
-    oracle = theme_fanout(point_features(decode.nodes_table(meta)), mapping).count()
+    def oracle_count():
+        ent = decode.entities_table(decode.with_entity_meta(spark.read.parquet(in_dir)))
+        return theme_fanout(point_features(decode.nodes_from_entities(ent)), mapping).count()
+
+    oracle = oracle_count()
     assert n1 == oracle
 
     # append more files: only the delta is processed (exactly-once)
     docs.write.mode("append").parquet(in_dir)
     run_incremental_export(spark, in_dir, mapping, out_dir, ckpt)
     n2 = spark.read.parquet(out_dir).count()
-    meta2 = decode.with_entity_meta(spark.read.parquet(in_dir))
-    oracle2 = theme_fanout(point_features(decode.nodes_table(meta2)), mapping).count()
+    oracle2 = oracle_count()
     assert n2 == oracle2
     assert n2 > n1
 

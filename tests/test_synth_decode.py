@@ -31,9 +31,12 @@ def test_tags_decode_matches_generator(spark):
         assert dict(r["tags"]) == oracle_tags[r["orig_id"]], r["orig_id"]
 
 
+def _entities(spark):
+    return decode.entities_table(decode.with_entity_meta(_docs(spark)))
+
+
 def test_node_coords_decode(spark):
-    docs = decode.with_entity_meta(_docs(spark))
-    nodes = decode.nodes_table(docs).orderBy("node_id").collect()
+    nodes = decode.nodes_from_entities(_entities(spark)).orderBy("node_id").collect()
     lon, lat = synth.node_lonlat(np.arange(400))
     for r in nodes:
         assert abs(r["lon"] - lon[r["node_id"]]) < 1e-12
@@ -50,9 +53,9 @@ def test_span_sequence_equality_invariant(spark):
 
 
 def test_way_refs_and_closedness(spark):
-    docs = decode.with_entity_meta(_docs(spark))
-    ways = decode.ways_table(docs)
-    refs = decode.way_refs_table(docs)
+    ent = _entities(spark)
+    ways = decode.ways_from_entities(ent)
+    refs = decode.way_refs_from_entities(ent)
     assert ways.count() == 120
     # seq is dense from 0 per way
     agg = refs.groupBy("way_id").agg(
@@ -71,8 +74,7 @@ def test_way_refs_and_closedness(spark):
 
 
 def test_members_decode(spark):
-    docs = decode.with_entity_meta(_docs(spark))
-    members = decode.rel_members_table(docs)
+    members = decode.rel_members_from_entities(_entities(spark))
     assert members.where(~F.col("role").isin("outer", "inner")).count() == 0
     # every relation has exactly one outer (per generator)
     outer_counts = (
