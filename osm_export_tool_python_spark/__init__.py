@@ -8,38 +8,12 @@ structural analysis and the mapping of every reference operator to its
 Spark-first equivalent.
 
 Parity anchors (reference file:line cited throughout the package):
-  - GeomType enum ........ reference osm_export_tool/__init__.py:8-11
+  - geometry-type enum ... the `geom_type` string column ('point' /
+                           'line' / 'polygon'); reference
+                           osm_export_tool/__init__.py:8-11
   - tag-filter DSL ....... reference osm_export_tool/sql.py
   - YAML mapping ......... reference osm_export_tool/mapping.py
   - geometry assembly .... reference osm_export_tool/tabular.py:251-339
 """
 
-from enum import IntEnum
-
 __version__ = "0.1.0"
-
-
-class GeomType(IntEnum):
-    """Feature geometry class (reference osm_export_tool/__init__.py:8-11)."""
-
-    POINT = 1
-    LINE = 2
-    POLYGON = 3
-
-
-#: string form used as the engine's dispatch/partition column value
-GEOM_TYPE_NAMES = {
-    GeomType.POINT: "point",
-    GeomType.LINE: "line",
-    GeomType.POLYGON: "polygon",
-}
-
-
-def human_size(num_bytes):
-    """Human-readable byte size (reference osm_export_tool/__init__.py:13-19)."""
-    size = float(num_bytes)
-    for unit in ("bytes", "KB", "MB", "GB"):
-        if abs(size) < 1024.0:
-            return "%3.1f %s" % (size, unit)
-        size /= 1024.0
-    return "%.1f %s" % (size, "TB")

@@ -23,8 +23,8 @@ wrappers in this module are the only Python↔JVM crossings.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
-MAX_ZOOM = 29
 _MERC_LAT_LIMIT = 85.05112878
 
 
@@ -209,7 +209,7 @@ def _rect_classify(rect, rings):
     return "outside"
 
 
-def polygon_cover(rings, zoom, min_zoom=0):
+def polygon_cover(rings, zoom):
     """Quadtree cover of a polygon: {cell_id: 'inside'|'boundary'}.
 
     The 'inside' class is the Spark-side equivalent of the reference's
@@ -227,14 +227,11 @@ def polygon_cover(rings, zoom, min_zoom=0):
         cls = _rect_classify((lon_w, lat_s, lon_e, lat_n), rings)
         if cls == "outside":
             return
-        if cls == "inside" and z >= min_zoom:
+        if cls == "inside":
             out[int(cell_from_zxy(z, np.uint64(x), np.uint64(y)))] = "inside"
             return
         if z == zoom:
-            if cls != "outside":
-                out[int(cell_from_zxy(z, np.uint64(x), np.uint64(y)))] = (
-                    "inside" if cls == "inside" else "boundary"
-                )
+            out[int(cell_from_zxy(z, np.uint64(x), np.uint64(y)))] = "boundary"
             return
         for cx in (2 * x, 2 * x + 1):
             for cy in (2 * y, 2 * y + 1):
@@ -268,8 +265,6 @@ def cover_at_zoom(cover, zoom):
 
 def cell_udf(zoom):
     """pandas_udf (lon: double, lat: double) -> cell id long."""
-    import pandas as pd  # noqa: F401 — module-scope name needed by typehints
-    globals()["pd"] = pd
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")

@@ -28,7 +28,6 @@ from operator import or_
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .. import GeomType
 
 _RANGE_OPS = {">", "<", ">=", "<="}
 
@@ -149,13 +148,6 @@ def select_keys_projection(theme, tags="tags", taken=()):
         F.try_element_at(t, F.lit(k)).alias(k if k not in taken else k + "_tag")
         for k in theme.keys
     ]
-
-
-def osm_id_column(orig_id="orig_id", src="src") -> Column:
-    """Relation-derived areas get negative ids (reference tabular.py:313)."""
-    o = F.col(orig_id) if isinstance(orig_id, str) else orig_id
-    s = F.col(src) if isinstance(src, str) else src
-    return F.when(s == F.lit("relation"), -o).otherwise(o).alias("osm_id")
 
 
 # -- closed-way polygon routing (reference tabular.py:18-27) ---------------

@@ -198,15 +198,6 @@ def to_prefix(sql):
     return expr
 
 
-def strip_quotes(token):
-    """Kept for API parity (reference sql.py:67-72); tokenizer already strips."""
-    if len(token) >= 2 and token[0] == '"' and token[-1] == '"':
-        token = token[1:-1]
-    if len(token) >= 2 and token[0] == "'" and token[-1] == "'":
-        token = token[1:-1]
-    return token
-
-
 # ---------------------------------------------------------------------------
 # Validator (reference sql.py:29-65)
 # ---------------------------------------------------------------------------

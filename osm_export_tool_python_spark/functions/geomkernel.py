@@ -183,42 +183,7 @@ def _segments_cross(p, q, a, b):
     return False
 
 
-def polyline_crosses_rings(pts, rings):
-    """Does any edge of the polyline cross any ring edge?  Vectorized
-    N_feature_edges × M_ring_edges numpy (proper crossings only —
-    touching endpoints don't count, same as _segments_cross)."""
-    pts = np.asarray(pts, dtype=np.float64)
-    if len(pts) < 2:
-        return False
-    p = pts[:-1]  # (N,2)
-    d = pts[1:] - p  # (N,2)
-    for ring in rings:
-        r = np.asarray(ring, dtype=np.float64)
-        if not np.array_equal(r[0], r[-1]):
-            r = np.vstack([r, r[0]])
-        a = r[:-1]  # (M,2)
-        e = r[1:] - a  # (M,2)
-        # orient of ring endpoints wrt each polyline edge: (N,M)
-        w0 = a[None, :, 0] - p[:, None, 0]
-        w1 = a[None, :, 1] - p[:, None, 1]
-        v0 = (a + e)[None, :, 0] - p[:, None, 0]
-        v1 = (a + e)[None, :, 1] - p[:, None, 1]
-        d1 = d[:, None, 0] * w1 - d[:, None, 1] * w0
-        d2 = d[:, None, 0] * v1 - d[:, None, 1] * v0
-        # orient of polyline endpoints wrt each ring edge
-        u0 = p[:, None, 0] - a[None, :, 0]
-        u1 = p[:, None, 1] - a[None, :, 1]
-        q0 = (p + d)[:, None, 0] - a[None, :, 0]
-        q1 = (p + d)[:, None, 1] - a[None, :, 1]
-        d3 = e[None, :, 0] * u1 - e[None, :, 1] * u0
-        d4 = e[None, :, 0] * q1 - e[None, :, 1] * q0
-        if (((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))).any():
-            return True
-    return False
-
-
-def batch_edges_cross_rings(pts, edge_valid, owner, n_owners, rings,
-                            chunk_pairs=4_000_000):
+def batch_edges_cross_rings(pts, edge_valid, owner, n_owners, rings):
     """Per-owner 'any edge properly crosses any ring edge' over ONE
     packed batch of features.
 
@@ -226,7 +191,7 @@ def batch_edges_cross_rings(pts, edge_valid, owner, n_owners, rings,
     edges (False where consecutive points belong to different rings or
     features); owner: (N-1,) owning-feature index per edge; n_owners:
     number of features.  Vectorized feature_edges × ring_edges with
-    chunking to bound the pair matrix."""
+    chunking to bound the pair matrix at ~4M pairs."""
     out = np.zeros(n_owners, dtype=bool)
     if len(pts) < 2 or not edge_valid.any():
         return out
@@ -240,7 +205,7 @@ def batch_edges_cross_rings(pts, edge_valid, owner, n_owners, rings,
         a = r[:-1]
         e = r[1:] - a
         m = len(a)
-        step = max(1, chunk_pairs // max(m, 1))
+        step = max(1, 4_000_000 // max(m, 1))
         for s in range(0, len(p), step):
             ps, ds = p[s : s + step], d[s : s + step]
             w0 = a[None, :, 0] - ps[:, None, 0]
@@ -630,14 +595,6 @@ def polygon_centroid(ring):
     cx = float(((x + xn) * cross).sum() / (6.0 * a))
     cy = float(((y + yn) * cross).sum() / (6.0 * a))
     return cx, cy
-
-
-def polyline_length_m(coords):
-    """Haversine length in meters of a lon/lat polyline."""
-    c = np.asarray(coords, dtype=np.float64)
-    if len(c) < 2:
-        return 0.0
-    return float(haversine_m(c[:-1, 0], c[:-1, 1], c[1:, 0], c[1:, 1]).sum())
 
 
 def haversine_m(lon1, lat1, lon2, lat2):

@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import yaml
 
-from .. import GeomType
 from .dsl import InvalidSQL, Matcher
 
 VALID_TYPES = ("points", "lines", "polygons")
@@ -99,13 +98,9 @@ class Theme:
         }
 
     def matches(self, geom_type, tags):
-        if geom_type == GeomType.POINT and not self.points:
-            return False
-        if geom_type == GeomType.LINE and not self.lines:
-            return False
-        if geom_type == GeomType.POLYGON and not self.polygons:
-            return False
-        return self.matcher.matches(tags)
+        """Reference Theme.matches (mapping.py:74-82); `geom_type` is the
+        engine's dispatch value ('point' / 'line' / 'polygon')."""
+        return geom_type in self.geom_type_names() and self.matcher.matches(tags)
 
     def geom_type_names(self):
         """Enabled geometry classes as the engine's string dispatch values."""

@@ -84,18 +84,6 @@ def mean_token_len(text="text") -> Column:
     )
 
 
-def quality_score(text="text") -> Column:
-    """Composite [0,1] quality heuristic: long enough, not too punctuated,
-    has stopwords (prose-like), sane mean token length."""
-    n_tok = token_count(text).cast("double")
-    len_score = F.least(n_tok / F.lit(50.0), F.lit(1.0))
-    punct_score = F.greatest(F.lit(0.0), F.lit(1.0) - punct_ratio(text) * 5.0)
-    stop_score = F.least(stopword_ratio(text) * 5.0, F.lit(1.0))
-    mtl = mean_token_len(text)
-    mtl_score = F.when((mtl >= 3.0) & (mtl <= 10.0), F.lit(1.0)).otherwise(F.lit(0.5))
-    return (len_score + punct_score + stop_score + mtl_score) / 4.0
-
-
 def lang_id(text="text") -> Column:
     """argmax over per-language stopword hit counts; ties and zero hits
     → 'und' (undetermined)."""

@@ -259,9 +259,7 @@ def _assemble_group(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def relation_polygon_features(
-    members: DataFrame, wcoords: DataFrame, keep_invalid: bool = False
-) -> DataFrame:
+def relation_polygon_features(members: DataFrame, wcoords: DataFrame) -> DataFrame:
     """type=multipolygon relations → multipolygon features with
     NEGATIVE osm_id (reference tabular.py:313).
 
@@ -276,8 +274,7 @@ def relation_polygon_features(
     assembled = joined.groupBy("rel_id").applyInPandas(
         lambda pdf: _assemble_group(pdf), schema=_ASSEMBLY_SCHEMA
     )
-    out = assembled if keep_invalid else assembled.where(F.col("valid"))
-    return out.where(F.size("tags") > 0).select(
+    return assembled.where(F.col("valid")).where(F.size("tags") > 0).select(
         (-F.col("rel_id")).alias("osm_id"),
         F.lit("relation").alias("src"),
         F.lit("polygon").alias("geom_type"),

@@ -8,20 +8,29 @@ Reference semantics (tabular.py):
   - polygons: same rule (:321-327).
 
 Spark-first structure (replaces shapely prepared geometry):
-  1. driver: AOI → quadtree cell cover with inside/boundary classes
-     (functions/cells.polygon_cover) — the prep() equivalent,
-  2. per feature (pure Column math): bbox → candidate class via a
-     broadcast cover dict inside one Arrow-vectorized pandas UDF:
-     'inside'  → keep with NO exact test (fast path),
-     'outside' → drop immediately,
-     'boundary'→ exact numpy kernel on the candidate subset only.
-  3. exact kernel (mapInPandas over candidates): PIP for points; for
-     lines/polygons intersects-test + convex-AOI cutting
-     (Cyrus–Beck / Sutherland–Hodgman).
+  1. driver: the AOI rings (plus, for cutting, their convex pieces)
+     are broadcast once — the prep() equivalent,
+  2. per feature, bbox → class 'i' (inside) / 'o' (outside) / 'b'
+     (boundary):
+     - JVM pregate (pure Column math): a bbox strictly disjoint from
+       the AOI's bbox is 'o' for any AOI shape and never crosses into
+       Python,
+     - rectangle fast path: an axis-aligned rectangle AOI classifies
+       every row in Column math (strictly inside → 'i', touching the
+       boundary → 'b'),
+     - any other AOI: the remaining rows go through the `classify`
+       pandas UDF → `_classify_batch`, which tests each bbox directly
+       against the rings (geomkernel.classify_bboxes),
+     then 'i' keeps the row with NO exact test, 'o' drops it, and 'b'
+     goes to the exact kernel,
+  3. exact kernel (mapInPandas over the 'b' rows only): PIP for
+     points; for lines/polygons intersects-test + cutting.
 
-At 100 TB the win is step 2: the cover broadcast is a few KB–MB, the
-candidate fraction is the AOI-boundary surface area ratio, and no
-shuffle is introduced — classification and clipping are narrow maps.
+The quadtree cell cover (AOI.cover, functions/cells.polygon_cover) is
+used only for scan-level partition pruning (AOI.prune_cells).  At
+100 TB the win is step 2: the candidate fraction is the AOI-boundary
+surface area ratio, and no shuffle is introduced — classification and
+clipping are narrow maps.
 
 Exactness: cutting is exact for ALL valid AOIs — convex (direct
 Cyrus–Beck / Sutherland–Hodgman), concave single-ring (ear-clip
@@ -134,15 +143,6 @@ class AOI:
                 polygon_cover(self.rings, self.cover_zoom), self.cover_zoom
             )
         return self._cover
-
-    def cell_classes(self):
-        inside = np.array(
-            [c for c, v in self.cover.items() if v == "inside"], dtype=np.int64
-        )
-        boundary = np.array(
-            [c for c, v in self.cover.items() if v == "boundary"], dtype=np.int64
-        )
-        return inside, boundary
 
     def prune_cells(self, zoom):
         """Cell ids at `zoom` overlapping the AOI — the partition-

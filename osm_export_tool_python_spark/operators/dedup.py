@@ -657,91 +657,6 @@ def embedding_near_dup_pairs_col(
 # duplicate clustering: connected components over near-dup pairs
 # ---------------------------------------------------------------------------
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-    checkpoint_every: int = 5,
-) -> DataFrame:
-    """(id, component) for every vertex of the near-dup pair graph;
-    `component` = the minimum id reachable from the vertex, so each
-    duplicate CLUSTER gets one canonical representative (keep the row
-    with id == component, drop the rest — the cluster-level form of
-    minhash_dedup's pairwise survivor pick).
-
-    Iterative min-label propagation: each round every vertex takes the
-    min of its own label and its neighbors' labels; converged when no
-    label changes.  Near-dup clusters have tiny diameter (chains of
-    near-identical docs), so 2-4 rounds typically suffice; `max_iter`
-    bounds pathological chains.
-
-    Scale shape: each round is one equi-join on vertex id + one
-    map-side-combining min-agg — all shuffles on the SAME key, so at
-    cluster scale the vertex frame can be pre-partitioned once and
-    every round reuses the partitioning.  Labels are persisted per
-    round (the convergence count materializes them) and lineage is
-    truncated with localCheckpoint every `checkpoint_every` rounds so
-    the plan doesn't grow unboundedly.  For graphs with super-node
-    components (billions of edges in one cluster) the documented
-    upgrade is the large-star/small-star algorithm (same primitive
-    ops); near-dup graphs thresholded at >=0.5 Jaccard don't exhibit
-    that in practice.
-    """
-    fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    rev = pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    edges = fwd.union(rev).distinct().persist()
-
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .persist()
-    )
-    labels.count()
-
-    try:
-        changed = None
-        for it in range(max_iter):
-            msgs = edges.join(
-                labels.withColumnRenamed("id", "src"), "src"
-            ).select(F.col("dst").alias("id"), "component")
-            mins = msgs.groupBy("id").agg(F.min("component").alias("nbr_min"))
-            new_labels = labels.join(mins, "id", "left").select(
-                "id",
-                F.least(
-                    F.col("component"),
-                    F.coalesce("nbr_min", F.col("component")),
-                ).alias("component"),
-            )
-            if (it + 1) % checkpoint_every == 0:
-                # truncate lineage BEFORE persisting so exactly one
-                # handle exists per round (persist-then-checkpoint
-                # leaked the pre-checkpoint cache)
-                new_labels = new_labels.localCheckpoint(eager=False)
-            new_labels = new_labels.persist()
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .where(F.col("n.component") != F.col("o.component"))
-                .count()
-            )
-            labels.unpersist()
-            labels = new_labels
-            if changed == 0:
-                break
-        if changed:
-            raise RuntimeError(
-                "connected_components did not converge in %d rounds "
-                "(%d labels still changing) — the pair graph has a "
-                "component with diameter > max_iter; raise max_iter"
-                % (max_iter, changed)
-            )
-        return labels
-    finally:
-        edges.unpersist()
-
-
 def _large_star(edges):
     """Large-star (Kiveris et al., "Connected Components in MapReduce
     and Beyond", SoCC 2014): every node u connects each STRICTLY
@@ -783,21 +698,18 @@ def connected_components_star(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """(id, component) via alternating large-star / small-star — the
     O(log n)-round connected-components algorithm (Kiveris et al.
-    2014).  Same output contract as connected_components (component =
-    min reachable id), but convergence no longer depends on component
-    DIAMETER: a path graph that costs the label-propagation variant
-    O(n) rounds finishes in O(log n) here, which is what survives
-    100 TB near-dup graphs with super-node boilerplate clusters.
-    Every round is two groupBy-min + join passes on the node key —
-    the same shuffle primitive as one propagation round.
+    2014); `component` = the minimum id reachable from the vertex.
+    Convergence does not depend on component DIAMETER: a path graph
+    that costs min-label propagation O(n) rounds finishes in O(log n)
+    here, which is what survives 100 TB near-dup graphs with
+    super-node boilerplate clusters.  Every round is two groupBy-min +
+    join passes on the node key.
 
-    Lineage is truncated with localCheckpoint every `checkpoint_every`
-    rounds; non-convergence raises loudly (never silently-wrong
-    labels)."""
+    Lineage is truncated with localCheckpoint every third round;
+    non-convergence raises loudly (never silently-wrong labels)."""
     # materialize the PAIR GRAPH exactly once: both `edges` (counted
     # eagerly below) and `vertices` (consumed only by the final
     # singleton anti-join) derive from it, and without this the
@@ -827,7 +739,7 @@ def connected_components_star(
         converged = False
         for it in range(max_iter):
             new_edges = _small_star(_large_star(edges))
-            if (it + 1) % checkpoint_every == 0:
+            if (it + 1) % 3 == 0:
                 new_edges = new_edges.localCheckpoint(eager=False)
             new_edges = new_edges.persist()
             n_new = new_edges.count()
@@ -855,7 +767,7 @@ def connected_components_star(
         # everything not a non-root member labels itself: component
         # roots AND nodes that only ever appeared in self-pairs
         # (src==dst edges are dropped above, but the node still gets a
-        # singleton label — same contract as connected_components)
+        # singleton label)
         selfs = vertices.join(members, "id", "left_anti").select(
             "id", F.col("id").alias("component")
         )

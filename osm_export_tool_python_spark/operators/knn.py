@@ -1,4 +1,4 @@
-"""kNN nearest-feature search / dedup via cell self-join.
+"""kNN nearest-feature search via cell self-join.
 
 North-star addition (no reference analog — SURVEY.md §2.5): for each
 point feature, find its k nearest neighbors WITHOUT an O(n²) cross
@@ -14,8 +14,7 @@ join:
 Correct iff the true k-th neighbor lies within one cell ring (~cell
 size); pick zoom so the expected NN distance ≪ cell edge.  Skewed hot
 cells are exactly where candidate lists explode — AQE skew-join
-handles the join side; for dedup thresholds use `radius_m` to bound
-candidates semantically.
+handles the join side.
 """
 
 from __future__ import annotations
@@ -92,7 +91,6 @@ def knn_join(
     id_col: str = "osm_id",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    radius_m: float = None,
 ) -> DataFrame:
     """(id, neighbor_id, dist_m, rank) — k nearest neighbors per point
     among points within one cell ring at `zoom`."""
@@ -126,8 +124,6 @@ def knn_join(
         # a target can be reached via several of the query's 9 cells? no —
         # targets carry ONE cell each, so each (q,t) pair appears once.
     )
-    if radius_m is not None:
-        pairs = pairs.where(F.col("dist_m") <= radius_m)
     if k == 1:
         # nearest-neighbor (the dedup path's shape): min(struct) is a
         # partial-aggregable reduction — map-side combine collapses
@@ -149,25 +145,3 @@ def knn_join(
         )
     w = Window.partitionBy("id").orderBy(F.col("dist_m").asc(), F.col("neighbor_id").asc())
     return pairs.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-def nearest_feature_dedup(
-    points: DataFrame,
-    radius_m: float,
-    zoom: int = 12,
-    id_col: str = "osm_id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-) -> DataFrame:
-    """Drop near-duplicate points: a point is removed if a LOWER-id
-    point lies within radius_m (deterministic survivor choice)."""
-    nn = knn_join(
-        points, k=1, zoom=zoom, id_col=id_col, lon_col=lon_col, lat_col=lat_col,
-        radius_m=radius_m,
-    )
-    dupes = nn.where(F.col("neighbor_id") < F.col("id")).select(
-        F.col("id").alias("__dup_id")
-    ).distinct()
-    return points.join(
-        dupes, points[id_col] == dupes["__dup_id"], "left_anti"
-    )

@@ -5,8 +5,8 @@ The decode/feature-extraction libraries (PIL/ffmpeg/torchcodec) do NOT
 exist in this environment, so the *decoders are stubs* — clearly marked
 and deterministic — while everything Spark-side is real and tested:
 schemas, Arrow batch shapes, mapInPandas plumbing, partitioning.  On a
-real cluster only `_decode_image_stub` / `_sample_frames_stub` are
-swapped for library calls; the plan shape is unchanged.
+real cluster only the stub decoders are swapped for library calls;
+the plan shape is unchanged.
 
 Layout: media rows are (media_id, kind, payload: binary, meta struct);
 the synthetic payload generator packs deterministic pseudo-pixels so
@@ -17,7 +17,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, "
@@ -78,12 +77,6 @@ def _decode_image_stub(payload: bytes, meta) -> np.ndarray:
     return arr.reshape(h, w, c)
 
 
-def _sample_frames_stub(payload: bytes, meta, every: int = 4) -> list:
-    """STUB frame sampler (video): real impl would use ffmpeg/decord."""
-    n = meta["n_frames"]
-    return list(range(0, n, every))
-
-
 def _segment_sums(cat, sizes):
     """Per-segment sums of a concatenated int64 array: prefix-sum
     differences — the empty-segment-safe equivalent of
@@ -93,7 +86,7 @@ def _segment_sums(cat, sizes):
     return cs[ends] - cs[ends - sizes]
 
 
-def extract_features(media: DataFrame, batch_note: str = "mean-channel") -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction: images → per-channel means +
     dims; audio → byte histogram moments; video → sampled-frame count
     vector.
@@ -181,41 +174,6 @@ def extract_features(media: DataFrame, batch_note: str = "mean-channel") -> Data
             )
 
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def resize_images(media: DataFrame, out_w: int = 4, out_h: int = 4) -> DataFrame:
-    """mapInPandas image resize (nearest-neighbor, numpy) — the batch
-    shape and schema of a real thumbnailing stage."""
-
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for t in pdf.itertuples(index=False):
-                if t.kind != "image":
-                    continue
-                meta = t.meta
-                img = _decode_image_stub(t.payload, meta)
-                yi = (np.arange(out_h) * meta["height"] // out_h)
-                xi = (np.arange(out_w) * meta["width"] // out_w)
-                small = img[np.ix_(yi, xi)]
-                out.append(
-                    {
-                        "media_id": t.media_id,
-                        "kind": "image",
-                        "payload": small.tobytes(),
-                        "meta": {
-                            "width": out_w,
-                            "height": out_h,
-                            "channels": meta["channels"],
-                            "sample_rate": 0,
-                            "n_frames": 1,
-                        },
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -373,13 +331,13 @@ def wav_content_sums_batch(payloads):
     return out
 
 
-def synth_real_media(spark, n: int = 100, partitions: int = None) -> DataFrame:
+def synth_real_media(spark, n: int = 100) -> DataFrame:
     """Media table whose image/audio payloads are REAL file bytes
     (BMP / WAV), exercising the genuine decoders end-to-end; video
     stays a stub payload (codecs are library-bound)."""
     from ..sources.synth import _splitmix64
 
-    rng_df = spark.range(0, n, 1, partitions or 4)
+    rng_df = spark.range(0, n, 1, 4)
 
     def gen(batches):
         for pdf in batches:
@@ -413,34 +371,3 @@ def synth_real_media(spark, n: int = 100, partitions: int = None) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return rng_df.mapInPandas(gen, schema=MEDIA_SCHEMA)
-
-
-def extract_features_real(media: DataFrame) -> DataFrame:
-    """Feature extraction over REAL file bytes: BMP → per-channel
-    means + dims (via decode_bmp), WAV → RMS + zero-crossing rate (via
-    decode_wav).  Same mapInPandas batch shape as extract_features."""
-
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for t in pdf.itertuples(index=False):
-                if t.kind == "image":
-                    img = decode_bmp(t.payload)
-                    feat = [float(img[:, :, ch].mean()) / 255.0 for ch in range(3)]
-                    feat += [img.shape[1] / 64.0, img.shape[0] / 64.0]
-                else:
-                    samples, rate = decode_wav(t.payload)
-                    x = samples.astype(np.float64) / 32768.0
-                    zcr = float(np.mean(np.signbit(x[:-1]) != np.signbit(x[1:])))
-                    feat = [float(np.sqrt(np.mean(x * x))), zcr, rate / 48000.0]
-                out.append(
-                    {
-                        "media_id": t.media_id,
-                        "kind": t.kind,
-                        "feat": [np.float32(v) for v in feat],
-                        "feat_dim": len(feat),
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)

@@ -32,6 +32,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -97,9 +98,6 @@ class IVFIndex:
         return cls(cent)
 
     def _assign_udf(self, spark, n_best: int):
-        import pandas as pd
-
-        globals()["pd"] = pd
         from pyspark.sql.functions import pandas_udf
 
         bc = spark.sparkContext.broadcast(self.centroids)
@@ -277,12 +275,6 @@ class PQIndex:
         raw inner product — without it, ADC's IP ranking would
         systematically favor large-norm vectors and no shortlist size
         could bound the cosine recall loss."""
-        import pandas as pd
-
-        # `from __future__ import annotations` stringifies the UDF
-        # signature; pandas_udf resolves it against MODULE globals, so
-        # `pd` must live there (same workaround as _assign_udf)
-        globals()["pd"] = pd
         from pyspark.sql.functions import pandas_udf
 
         from ..parallel import fan_out

@@ -53,7 +53,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import cell_from_zxy, lonlat_to_tile
+from ..functions.cells import cell_from_zxy
 
 
 def _spread_bits_col(v):
@@ -91,9 +91,7 @@ def cell_col(zoom, x, y):
     )
 
 
-def with_tile_cells(
-    features: DataFrame, min_zoom: int, max_zoom: int, max_cells_per_zoom: int = None
-) -> DataFrame:
+def with_tile_cells(features: DataFrame, min_zoom: int, max_zoom: int) -> DataFrame:
     """Add `cell` (exploded): one row per (feature, BBOX-covering tile,
     zoom).  Entirely JVM-side Column math — zoom explode, per-zoom
     bbox→tile-range arithmetic, sequence×sequence explode, Morton
@@ -102,10 +100,8 @@ def with_tile_cells(
 
     Bbox-cover semantics (a SUPERSET of geometry intersection) — the
     right shape for the cell-prefix partition index; the tile TABLE
-    uses `with_tile_cells_exact`.  No cap by default: if
-    `max_cells_per_zoom` is set, (feature, zoom) rows over the cap are
-    dropped, and the caller MUST surface the drop count (see
-    `bbox_fanout_over_cap`) — silent truncation is not an option."""
+    uses `with_tile_cells_exact`.  Uncapped: every bbox tile of every
+    zoom is emitted."""
     z = F.explode(F.sequence(F.lit(min_zoom), F.lit(max_zoom))).alias("z")
     df = features.select("*", z)
     x0 = tile_x_col(F.array_min("xs"), F.col("z"))
@@ -113,38 +109,11 @@ def with_tile_cells(
     y0 = tile_y_col(F.array_max("ys"), F.col("z"))  # y grows southward
     y1 = tile_y_col(F.array_min("ys"), F.col("z"))
     df = df.withColumn("__x0", x0).withColumn("__x1", x1).withColumn("__y0", y0).withColumn("__y1", y1)
-    if max_cells_per_zoom is not None:
-        df = df.where(
-            (F.col("__x1") - F.col("__x0") + 1) * (F.col("__y1") - F.col("__y0") + 1)
-            <= max_cells_per_zoom
-        )
     df = df.withColumn("__tx", F.explode(F.sequence("__x0", "__x1")))
     df = df.withColumn("__ty", F.explode(F.sequence("__y0", "__y1")))
     return df.withColumn(
         "cell", cell_col(F.col("z"), F.col("__tx"), F.col("__ty"))
     ).drop("z", "__x0", "__x1", "__y0", "__y1", "__tx", "__ty")
-
-
-def bbox_fanout_over_cap(
-    features: DataFrame, min_zoom: int, max_zoom: int, cap: int
-) -> DataFrame:
-    """(osm_id, src, z, n_cells) for every (feature, zoom) whose bbox
-    cover exceeds `cap` — the visibility companion to a capped
-    `with_tile_cells` call: count() of this frame is the manifest
-    metric that makes any truncation loud."""
-    z = F.explode(F.sequence(F.lit(min_zoom), F.lit(max_zoom))).alias("z")
-    df = features.select("osm_id", "src", "xs", "ys", z)
-    nx = tile_x_col(F.array_max("xs"), F.col("z")) - tile_x_col(
-        F.array_min("xs"), F.col("z")
-    ) + 1
-    ny = tile_y_col(F.array_min("ys"), F.col("z")) - tile_y_col(
-        F.array_max("ys"), F.col("z")
-    ) + 1
-    return (
-        df.withColumn("n_cells", nx * ny)
-        .where(F.col("n_cells") > cap)
-        .select("osm_id", "src", "z", "n_cells")
-    )
 
 
 # ---------------------------------------------------------------------------

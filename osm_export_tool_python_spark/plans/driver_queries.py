@@ -16,7 +16,8 @@ Spatial queries derive deterministic coordinates from TPC-H keys:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import pandas as pd
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
@@ -29,18 +30,6 @@ from ..operators.similarity import brute_force_topk
 
 def _t(spark, sf_dir, name):
     return spark.read.parquet("%s/%s.parquet" % (sf_dir, name))
-
-
-def _lon(k):
-    return ((k * 7) % 3600) / 10.0 - 180.0 + 0.05
-
-
-def _lat(k):
-    return ((k * 13) % 1600) / 10.0 - 80.0 + 0.05
-
-
-LON_SQL = "(((%(k)s * 7) % 3600) / 10.0 - 180.0 + 0.05)"
-LAT_SQL = "(((%(k)s * 13) % 1600) / 10.0 - 80.0 + 0.05)"
 
 
 # ---------------------------------------------------------------------------
@@ -532,35 +521,19 @@ FROM reach GROUP BY src"""
 _SIMHASH_HEX_HI = ("8", "9", "a", "b", "c", "d", "e", "f")
 
 
-def _simhash_expr(n_bits=16):
-    """n_bits-wide SimHash Column with md5-derived bits (oracle-parity
-    variant of operators/dedup.py:simhash_col, which uses xxhash64 at
-    scale): bit j of doc = majority vote over tokens of the top bit of
-    md5(token)'s j-th hex digit (digit ≥ '8'), weighted by token
-    frequency.  Strictly-greater majority → deterministic tie → 0.
-    n_bits ≤ 32 (md5 has 32 hex digits)."""
-    toks = T.tokens("text")
-    n = F.size(toks)
-
-    def bit_pred(j):
-        # closure factory — a default-arg lambda would be arity-2 and
-        # PySpark would pass the element INDEX as j (silently wrong)
-        return lambda t: F.substring(F.md5(t), j + 1, 1).isin(*_SIMHASH_HEX_HI)
-
-    sim = F.lit(0)
-    for j in range(n_bits):
-        hit = F.size(F.filter(toks, bit_pred(j)))
-        sim = sim + F.when(hit * 2 > n, F.lit(1 << j)).otherwise(F.lit(0))
-    return sim.cast("bigint")
-
-
 def _simhash_md5_table(docs, n_bits, out):
-    """(doc_id, <out>) — the SAME md5 simhash as `_simhash_expr`,
-    computed by explode → groupBy conditional-count aggregation: one
-    md5 per token inside codegen (the per-row form evaluates md5
-    INSIDE each of the n_bits interpreted `filter` lambdas — n_bits
-    md5s per token).  Zero-token docs survive via explode_outer (NULL
-    token → zero counts → simhash 0, the per-row form's value)."""
+    """(doc_id, <out>) — an n_bits-wide SimHash with md5-derived bits
+    (oracle-parity variant of operators/dedup.py:simhash_col, which
+    uses xxhash64 at scale): bit j of doc = majority vote over tokens
+    of the top bit of md5(token)'s j-th hex digit (digit ≥ '8'),
+    weighted by token frequency; strictly-greater majority, so a tie
+    gives 0.  n_bits ≤ 32 (md5 has 32 hex digits).
+
+    Computed by explode → groupBy conditional-count aggregation: one
+    md5 per token inside codegen (a per-row form would evaluate md5
+    INSIDE each of n_bits interpreted `filter` lambdas).  Zero-token
+    docs survive via explode_outer (NULL token → zero counts →
+    simhash 0)."""
     toks = docs.select("doc_id", F.explode_outer(T.tokens("text")).alias("t"))
     md5 = F.md5("t")
     g = toks.groupBy("doc_id").agg(
@@ -1128,9 +1101,6 @@ def q_pip_triangle(spark, sf_dir):
     """Point-in-polygon via the engine's vectorized numpy ray-cast
     kernel, oracled by SQL half-plane sign tests (convex AOI)."""
     import numpy as np
-    import pandas as pd
-
-    globals()["pd"] = pd
     from pyspark.sql.functions import pandas_udf
 
     from ..functions.geomkernel import points_in_rings
@@ -1792,9 +1762,6 @@ def q_media_features(spark, sf_dir):
     the meta-derived tail feature (h/64 for images, n_frames for
     video; audio's tail is payload-statistical → NULL on both sides)."""
     import numpy as np
-    import pandas as pd
-
-    globals()["pd"] = pd  # resolve string annotations (future-annotations module)
     from pyspark.sql.functions import pandas_udf
 
     from ..operators.multimodal import extract_features, synth_media
@@ -1881,9 +1848,6 @@ def q_media_real_roundtrip(spark, sf_dir):
     round-trip every pixel/sample exactly (header layout, bottom-up
     BGR rows, row padding, chunk scan)."""
     import numpy as np
-    import pandas as pd
-
-    globals()["pd"] = pd  # resolve string annotations (future-annotations module)
     from pyspark.sql.functions import pandas_udf
 
     from ..operators.multimodal import (

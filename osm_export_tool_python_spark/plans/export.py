@@ -21,7 +21,7 @@ from .. import lineage
 from ..operators import assemble
 from ..operators.clip import AOI, clip_features
 from ..operators.themes import prefilter, theme_fanout, theme_output
-from ..operators.tiles import bbox_fanout_over_cap, tile_features
+from ..operators.tiles import tile_features
 from ..sources import decode
 from .manifest import ExportManifest
 from .sinks import launder_name, make_filename, wkt_column, kml_geometry_column
@@ -198,157 +198,138 @@ def export(
 
 
 def _write_tabular(spark, themed, mapping, out_dir, fmt, manifest,
-                   polygon_centroid, binary=True):
-    """Wrapper owning the (single) GeoPackage connection: the sqlite
-    handle must close on success AND on mid-stream failure, or a
-    resume run would open a second connection beside an abandoned
-    transaction/-journal."""
-    state = {"gpkg_writer": None}
+                   polygon_centroid, binary):
+    # the (single) GeoPackage connection must close on success AND on
+    # mid-stream failure, or a resume run would open a second
+    # connection beside an abandoned transaction/-journal
+    gpkg_writer = None
     try:
-        _write_tabular_impl(
-            spark, themed, mapping, out_dir, fmt, manifest,
-            polygon_centroid, binary, state,
-        )
-    finally:
-        if state["gpkg_writer"] is not None:
-            state["gpkg_writer"].close()
-
-
-def _write_tabular_impl(spark, themed, mapping, out_dir, fmt, manifest,
-                        polygon_centroid, binary, state):
-    for theme in mapping.themes:
-        base = theme_output(themed, theme, polygon_centroid=polygon_centroid)
-        if fmt == "gpkg":
-            # one root, one layer dir per theme, mixed geometry
-            # (reference Geopackage, tabular.py:146-196)
-            part_key = "gpkg/%s" % theme.name
-            path = os.path.join(out_dir, "gpkg", make_filename(theme.name))
-            if manifest.is_done(part_key):
-                continue
-            df = base.select("*", wkt_column()).drop(
-                "xs", "ys", "ring_offsets", "part_offsets"
-            )
-            df.write.mode("overwrite").parquet(path)
-            parts = partition_lineage(spark, path)
-            info = dict(
-                format="gpkg", theme=theme.name, path=path,
-                rows=sum(parts.values()), partitions=parts,
-            )
-            if binary:
-                from .binary_sinks import GeoPackageWriter
-
-                if state["gpkg_writer"] is None:
-                    state["gpkg_writer"] = GeoPackageWriter(
-                        os.path.join(out_dir, "gpkg", "export.gpkg")
-                    )
-                state["gpkg_writer"].write_layer(
-                    make_filename(theme.name),
-                    theme.keys,
-                    base.toLocalIterator(),
-                    with_osm_id=theme.osm_id,
-                )
-                info["binary"] = state["gpkg_writer"].path
-            manifest.add(**info)
-            manifest.mark_done(part_key, **info)
-        else:
-            # per (theme, geomtype) datasets (Shapefile/Kml writers,
-            # tabular.py:86-144 / :32-84).  In centroid mode polygons
-            # are rewritten to points upstream, so they land in the
-            # point dataset; a polygons-only theme has nowhere to put
-            # them — fail loudly like the reference's
-            # layers[(name, GeomType.POINT)] KeyError (tabular.py:330-336).
-            enabled = theme.geom_type_names()
-            if polygon_centroid and "polygon" in enabled and "point" not in enabled:
-                raise ValueError(
-                    "polygon_centroid routes theme %r polygons to its POINT "
-                    "layer, which the theme does not enable (%s output)"
-                    % (theme.name, fmt)
-                )
-            for gt in enabled:
-                part_key = "%s/%s/%s" % (fmt, theme.name, gt)
-                path = os.path.join(
-                    out_dir, fmt, "%s_%s" % (make_filename(theme.name), gt)
-                )
+        for theme in mapping.themes:
+            base = theme_output(themed, theme, polygon_centroid=polygon_centroid)
+            if fmt == "gpkg":
+                # one root, one layer dir per theme, mixed geometry
+                # (reference Geopackage, tabular.py:146-196)
+                part_key = "gpkg/%s" % theme.name
+                path = os.path.join(out_dir, "gpkg", make_filename(theme.name))
                 if manifest.is_done(part_key):
                     continue
-                df = df_gt = base.where(F.col("geom_type") == gt)
-                if fmt == "shp":
-                    rename = {
-                        k: launder_name(k)
-                        for k in theme.keys
-                        if launder_name(k) != k
-                    }
-                    df = df.select(
-                        [F.col(c).alias(rename.get(c, c)) for c in df.columns]
-                    ).select("*", wkt_column()).drop(
-                        "xs", "ys", "ring_offsets", "part_offsets"
-                    )
-                else:  # kml
-                    df = df.select("*", kml_geometry_column()).drop(
-                        "xs", "ys", "ring_offsets", "part_offsets"
-                    )
+                df = base.select("*", wkt_column()).drop(
+                    "xs", "ys", "ring_offsets", "part_offsets"
+                )
                 df.write.mode("overwrite").parquet(path)
                 parts = partition_lineage(spark, path)
                 info = dict(
-                    format=fmt, theme=theme.name, path=path,
-                    rows=sum(parts.values()), partitions=parts, geom_type=gt,
+                    format="gpkg", theme=theme.name, path=path,
+                    rows=sum(parts.values()), partitions=parts,
                 )
                 if binary:
-                    bin_base = os.path.join(
-                        out_dir, fmt + "_bin",
-                        "%s_%s" % (make_filename(theme.name), gt),
+                    from .binary_sinks import GeoPackageWriter
+
+                    if gpkg_writer is None:
+                        gpkg_writer = GeoPackageWriter(
+                            os.path.join(out_dir, "gpkg", "export.gpkg")
+                        )
+                    gpkg_writer.write_layer(
+                        make_filename(theme.name),
+                        theme.keys,
+                        base.toLocalIterator(),
+                        with_osm_id=theme.osm_id,
                     )
-                    if fmt == "shp":
-                        from .binary_sinks import write_shapefile
-
-                        write_shapefile(
-                            bin_base, gt, theme.keys,
-                            df_gt.toLocalIterator(),
-                            with_osm_id=theme.osm_id,
-                            field_names=[launder_name(k) for k in theme.keys],
-                        )
-                        info["binary"] = bin_base + ".shp"
-                    else:  # kml
-                        from .binary_sinks import write_kml
-
-                        write_kml(
-                            bin_base + ".kml",
-                            "%s %s" % (theme.name, gt),
-                            theme.keys,
-                            df_gt.toLocalIterator(),
-                            with_osm_id=theme.osm_id,
-                        )
-                        info["binary"] = bin_base + ".kml"
+                    info["binary"] = gpkg_writer.path
                 manifest.add(**info)
                 manifest.mark_done(part_key, **info)
+            else:
+                # per (theme, geomtype) datasets (Shapefile/Kml writers,
+                # tabular.py:86-144 / :32-84).  In centroid mode polygons
+                # are rewritten to points upstream, so they land in the
+                # point dataset; a polygons-only theme has nowhere to put
+                # them — fail loudly like the reference's
+                # point-layer KeyError (tabular.py:330-336).
+                enabled = theme.geom_type_names()
+                if polygon_centroid and "polygon" in enabled and "point" not in enabled:
+                    raise ValueError(
+                        "polygon_centroid routes theme %r polygons to its POINT "
+                        "layer, which the theme does not enable (%s output)"
+                        % (theme.name, fmt)
+                    )
+                for gt in enabled:
+                    part_key = "%s/%s/%s" % (fmt, theme.name, gt)
+                    path = os.path.join(
+                        out_dir, fmt, "%s_%s" % (make_filename(theme.name), gt)
+                    )
+                    if manifest.is_done(part_key):
+                        continue
+                    df = df_gt = base.where(F.col("geom_type") == gt)
+                    if fmt == "shp":
+                        rename = {
+                            k: launder_name(k)
+                            for k in theme.keys
+                            if launder_name(k) != k
+                        }
+                        df = df.select(
+                            [F.col(c).alias(rename.get(c, c)) for c in df.columns]
+                        ).select("*", wkt_column()).drop(
+                            "xs", "ys", "ring_offsets", "part_offsets"
+                        )
+                    else:  # kml
+                        df = df.select("*", kml_geometry_column()).drop(
+                            "xs", "ys", "ring_offsets", "part_offsets"
+                        )
+                    df.write.mode("overwrite").parquet(path)
+                    parts = partition_lineage(spark, path)
+                    info = dict(
+                        format=fmt, theme=theme.name, path=path,
+                        rows=sum(parts.values()), partitions=parts, geom_type=gt,
+                    )
+                    if binary:
+                        bin_base = os.path.join(
+                            out_dir, fmt + "_bin",
+                            "%s_%s" % (make_filename(theme.name), gt),
+                        )
+                        if fmt == "shp":
+                            from .binary_sinks import write_shapefile
+
+                            write_shapefile(
+                                bin_base, gt, theme.keys,
+                                df_gt.toLocalIterator(),
+                                with_osm_id=theme.osm_id,
+                                field_names=[launder_name(k) for k in theme.keys],
+                            )
+                            info["binary"] = bin_base + ".shp"
+                        else:  # kml
+                            from .binary_sinks import write_kml
+
+                            write_kml(
+                                bin_base + ".kml",
+                                "%s %s" % (theme.name, gt),
+                                theme.keys,
+                                df_gt.toLocalIterator(),
+                                with_osm_id=theme.osm_id,
+                            )
+                            info["binary"] = bin_base + ".kml"
+                    manifest.add(**info)
+                    manifest.mark_done(part_key, **info)
+    finally:
+        if gpkg_writer is not None:
+            gpkg_writer.close()
 
 
-def _write_tiles(spark, themed, out_dir, zooms, manifest, binary=True, exact=True):
+def _write_tiles(spark, themed, out_dir, zooms, manifest, binary):
     part_key = "tiles/z%d-%d" % zooms
     path = os.path.join(out_dir, "tiles")
     # tile features once over the deduped feature set (a feature in
     # many themes packs once per tile, like the reference's mbtiles
     # which is theme-independent raster fetch)
     uniq = themed.dropDuplicates(["osm_id", "src", "geom_type"])
-    # NOTHING is dropped in either assignment mode: exact assignment
-    # has no cap by construction (fanout is O(tiles the geometry
-    # touches)), and the bbox fallback below calls tile_features with
-    # no cap either — so the drop metric is 0 by construction, and the
-    # bbox path additionally reports how many (feature, zoom) rows
-    # EXCEED the legacy 256-tile cap purely as a fanout-visibility
-    # figure (they are all still assigned).  Recorded BEFORE the
-    # resume early-return — manifest.write() rebuilds metrics from
-    # this run, so a resumed export would otherwise drop the key that
-    # tests and consumers rely on.
+    # NOTHING is dropped: exact assignment has no cap by construction
+    # (fanout is O(tiles the geometry touches)), so the drop metric is
+    # 0.  Recorded BEFORE the resume early-return — manifest.write()
+    # rebuilds metrics from this run, so a resumed export would
+    # otherwise drop the key that tests and consumers rely on.
     manifest.add_metric("tiles_capped_feature_zooms", 0)
-    if not exact:
-        manifest.add_metric(
-            "tiles_bbox_over_legacy_cap",
-            bbox_fanout_over_cap(uniq, zooms[0], zooms[1], cap=256).count(),
-        )
     if manifest.is_done(part_key):
         return
-    tf = tile_features(uniq, zooms[0], zooms[1], exact=exact)
+    tf = tile_features(uniq, zooms[0], zooms[1])
     # partition count from cluster parallelism — tf.rdd.getNumPartitions()
     # would force plan materialization and bypass AQE just to pick a number
     n_out = max(spark.sparkContext.defaultParallelism // 2, 1)

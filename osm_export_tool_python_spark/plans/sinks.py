@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -142,20 +141,3 @@ def kml_geometry_column() -> F.Column:
         .otherwise(poly)
         .alias("kml")
     )
-
-
-# ---------------------------------------------------------------------------
-# writers
-# ---------------------------------------------------------------------------
-
-def write_theme_parquet(theme_df: DataFrame, path: str, rename=None) -> int:
-    """Write one themed output; returns row count (for the manifest)."""
-    df = theme_df
-    if rename:
-        df = df.select([F.col(c).alias(rename.get(c, c)) for c in df.columns])
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path).count()
-
-
-def geom_type_splits(theme) -> list:
-    return theme.geom_type_names()

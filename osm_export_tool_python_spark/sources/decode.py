@@ -32,15 +32,14 @@ from pyspark.sql.functions import pandas_udf
 #: parquet/Iceberg preserve array element order, so re-sorting is
 #: redundant.  The comparator-lambda sort is interpreted (not codegen)
 #: and costs ~25% of total decode time at scale; flip this to False for
-#: producers that shuffle spans.  `spans_out_of_order_count` audits the
-#: assumption cheaply.
+#: producers that shuffle spans.  Nothing audits the assumption yet: an
+#: out-of-order input decodes without error.
 ASSUME_SPANS_SORTED = True
 
 
-def _spans_sorted(spans=None):
+def _spans_sorted():
     """Offset-order restoring sort (identity under ASSUME_SPANS_SORTED)."""
-    if spans is None:
-        spans = F.col("spans")
+    spans = F.col("spans")
     if ASSUME_SPANS_SORTED:
         return spans
     return F.array_sort(
@@ -49,20 +48,6 @@ def _spans_sorted(spans=None):
         .when(a.offset > b.offset, 1)
         .otherwise(0),
     )
-
-
-def spans_out_of_order_count(docs: DataFrame) -> int:
-    """Audit query for ASSUME_SPANS_SORTED: number of documents whose
-    span offsets are not strictly increasing."""
-    bad = F.exists(
-        F.zip_with(
-            F.slice("spans", 1, F.greatest(F.size("spans") - 1, F.lit(0))),
-            F.slice("spans", 2, F.greatest(F.size("spans") - 1, F.lit(0))),
-            lambda a, b: a.offset >= b.offset,
-        ),
-        lambda x: x,
-    )
-    return docs.where(bad).count()
 
 
 def with_entity_meta(docs: DataFrame) -> DataFrame:

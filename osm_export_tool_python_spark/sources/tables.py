@@ -47,16 +47,14 @@ def write_cell_partitioned(
     ).parquet(path)
 
 
-def read_aoi_pruned(
-    spark, path: str, aoi, zoom: int = DEFAULT_PREFIX_ZOOM, dedupe=("osm_id", "src")
-) -> DataFrame:
+def read_aoi_pruned(spark, path: str, aoi, zoom: int = DEFAULT_PREFIX_ZOOM) -> DataFrame:
     """Scan only the partitions whose cell prefix overlaps the AOI
     cover; duplicates from multi-assignment are dropped on (osm_id,
     src).  Planning-time partition pruning — unread directories are
     never listed."""
     prune = sorted(aoi.prune_cells(zoom))
     df = spark.read.parquet(path).where(F.col("cell_prefix").isin(prune))
-    return df.dropDuplicates(list(dedupe))
+    return df.dropDuplicates(["osm_id", "src"])
 
 
 def write_hotkey_clustered(docs: DataFrame, path: str, hot_keys) -> None:
@@ -195,12 +193,10 @@ def _clear_orphan_location(spark, table: str) -> None:
         shutil.rmtree(loc, ignore_errors=True)
 
 
-def write_bucketed(
-    df: DataFrame, table: str, buckets: int, *keys: str, sort: bool = True
-) -> None:
+def write_bucketed(df: DataFrame, table: str, buckets: int, *keys: str) -> None:
     """Persist `df` as a Spark BUCKETED table on `keys`: rows are
     hash-partitioned into `buckets` files per write-partition and
-    (with sort=True) sorted within each bucket.  Any later equi-join
+    sorted within each bucket.  Any later equi-join
     or aggregation keyed on `keys` between tables bucketed the same
     way is EXCHANGE-FREE — the scan itself delivers co-partitioned
     (and pre-sorted) input, so the shuffle that would normally carry
@@ -219,14 +215,10 @@ def write_bucketed(
     converts that per-run cost into a one-time write-side sort."""
     _clear_orphan_location(df.sparkSession, table)
     w = df.write.mode("overwrite").format("parquet").bucketBy(buckets, *keys)
-    if sort:
-        w = w.sortBy(*keys)
-    w.saveAsTable(table)
+    w.sortBy(*keys).saveAsTable(table)
 
 
-def append_bucketed(
-    df: DataFrame, table: str, buckets: int, *keys: str, sort: bool = True
-) -> None:
+def append_bucketed(df: DataFrame, table: str, buckets: int, *keys: str) -> None:
     """Append rows to an existing bucketed table with the SAME
     (buckets, keys) spec — the accept step of the incremental dedup
     index: once a new batch survives dedup_against_index, its band
@@ -236,6 +228,4 @@ def append_bucketed(
     appends; the spec must match the original write_bucketed call
     (Spark rejects a mismatched append)."""
     w = df.write.mode("append").format("parquet").bucketBy(buckets, *keys)
-    if sort:
-        w = w.sortBy(*keys)
-    w.saveAsTable(table)
+    w.sortBy(*keys).saveAsTable(table)

@@ -43,24 +43,19 @@ SPAN_STRUCT = StructType(
 )
 
 
-def stream_documents(spark, input_dir: str, max_files_per_trigger: int = None) -> DataFrame:
+def stream_documents(spark, input_dir: str) -> DataFrame:
     """readStream over a documents parquet directory."""
-    reader = spark.readStream.schema(SPAN_STRUCT)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(input_dir)
+    return spark.readStream.schema(SPAN_STRUCT).parquet(input_dir)
 
 
-def incremental_point_features(
-    doc_stream: DataFrame, mapping, select_keys: bool = True
-) -> DataFrame:
+def incremental_point_features(doc_stream: DataFrame, mapping) -> DataFrame:
     """Streaming point-feature extraction: decode tags + node coords,
     theme fan-out — append-mode safe (no aggregation).
 
-    `select_keys=True` additionally projects the union of the
-    mapping's select keys as NULL-padded top-level columns (the batch
-    `theme_output` row shape, reference tabular.py:71-79), so the
-    streamed sink is directly consumable without the tags map."""
+    The union of the mapping's select keys is projected as NULL-padded
+    top-level columns (the batch `theme_output` row shape, reference
+    tabular.py:71-79), so the streamed sink is directly consumable
+    without the tags map."""
     from ..operators.assemble import point_features
     from ..operators.themes import theme_fanout
     from ..sources import decode
@@ -69,23 +64,21 @@ def incremental_point_features(
         decode.entities_table(decode.with_entity_meta(doc_stream))
     )
     themed = theme_fanout(point_features(nodes), mapping)
-    if select_keys:
-        keys = sorted({k for t in mapping.themes for k in t.keys})
-        taken = set(themed.columns)
-        # a key that collides with a structural output column ('theme',
-        # 'osm_id', 'tags' …) gets the same deterministic '_tag' suffix
-        # as the batch projection (functions/compile.select_keys_
-        # projection) — a duplicate name would fail at stream start
-        themed = themed.select(
-            "*",
-            *[
-                F.try_element_at("tags", F.lit(kk)).alias(
-                    kk if kk not in taken else kk + "_tag"
-                )
-                for kk in keys
-            ],
-        )
-    return themed
+    keys = sorted({k for t in mapping.themes for k in t.keys})
+    taken = set(themed.columns)
+    # a key that collides with a structural output column ('theme',
+    # 'osm_id', 'tags' …) gets the same deterministic '_tag' suffix
+    # as the batch projection (functions/compile.select_keys_
+    # projection) — a duplicate name would fail at stream start
+    return themed.select(
+        "*",
+        *[
+            F.try_element_at("tags", F.lit(kk)).alias(
+                kk if kk not in taken else kk + "_tag"
+            )
+            for kk in keys
+        ],
+    )
 
 
 def run_incremental_export(
@@ -94,10 +87,10 @@ def run_incremental_export(
     mapping,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Append-mode streaming export of point features with an
-    exactly-once parquet sink (Spark checkpoint = resume state)."""
+    exactly-once parquet sink (Spark checkpoint = resume state): one
+    availableNow trigger over the new files, then return."""
     themed = incremental_point_features(stream_documents(spark, input_dir), mapping)
     writer = (
         themed.drop("tags")
@@ -105,23 +98,8 @@ def run_incremental_export(
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
     q = writer.start()
-    if available_now:
-        q.awaitTermination()
+    q.awaitTermination()
     return q
-
-
-def windowed_event_counts(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Late-data-tolerant windowed aggregation over the events stream
-    (ts, event_type): the canonical watermark + window pattern."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-        .select("w.start", "w.end", "event_type", "n", "total_value")
-    )

@@ -5,17 +5,14 @@ ranges) at the Spark layer."""
 
 import random
 
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     MapType, StringType, StructField, StructType,
 )
 
-from osm_export_tool_python_spark import GeomType
 from osm_export_tool_python_spark.functions.compile import (
     any_theme_predicate,
     closed_way_is_polygon_col,
     compile_matcher,
-    compile_theme,
     select_keys_projection,
     theme_match_array,
 )
@@ -107,7 +104,6 @@ def test_theme_predicate_and_fanout(spark):
     assert got["d"] == ([False, False], False)
 
     # oracle: Theme.matches on the same rows
-    gt = {"point": GeomType.POINT, "line": GeomType.LINE, "polygon": GeomType.POLYGON}
     rows = {
         "a": ("polygon", {"building": "yes"}),
         "b": ("point", {"building": "yes"}),
@@ -116,7 +112,7 @@ def test_theme_predicate_and_fanout(spark):
     }
     for rid, (g, tags) in rows.items():
         for ti, th in enumerate(m.themes):
-            assert th.matches(gt[g], tags) == got[rid][0][ti]
+            assert th.matches(g, tags) == got[rid][0][ti]
 
 
 def test_select_keys_projection(spark):

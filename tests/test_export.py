@@ -186,7 +186,7 @@ def test_centroid_donut_and_multipart(spark):
 
 def test_centroid_shp_routing(spark, docs, tmp_path_factory):
     """Centroid mode on shp/kml: centroids land in the theme's POINT
-    dataset (reference Handler.area writes GeomType.POINT, tabular.py:
+    dataset (reference Handler.area writes the point layer, tabular.py:
     330-336); a polygons-only theme fails loudly like the reference's
     layer KeyError."""
     out = str(tmp_path_factory.mktemp("export_shp_centroid"))

@@ -10,7 +10,6 @@ from osm_export_tool_python_spark.functions.geomkernel import (
     is_convex,
     points_in_rings,
     polygon_centroid,
-    polyline_length_m,
     segment_intersects_rect,
     signed_area,
 )
@@ -120,8 +119,3 @@ class TestMeasures:
         # Paris (2.3522, 48.8566) ↔ London (-0.1276, 51.5072) ≈ 343.5 km
         d = haversine_m(2.3522, 48.8566, -0.1276, 51.5072)
         assert abs(d / 1000.0 - 343.5) < 1.5
-
-    def test_polyline_length_equator(self):
-        # 1 degree of longitude at the equator ≈ 111.195 km
-        d = polyline_length_m(np.array([[0.0, 0.0], [1.0, 0.0]]))
-        assert abs(d / 1000.0 - 111.195) < 0.1

@@ -1,10 +1,9 @@
-"""kNN cell-join vs brute-force oracle; near-dup point removal."""
+"""kNN cell-join vs brute-force oracle."""
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from osm_export_tool_python_spark.functions.geomkernel import haversine_m
-from osm_export_tool_python_spark.operators.knn import knn_join, nearest_feature_dedup
+from osm_export_tool_python_spark.operators.knn import knn_join
 
 
 def _points(n=120, seed=9):
@@ -53,15 +52,3 @@ def test_knn_across_cell_boundary(spark):
     )
     got = {r["id"]: r["neighbor_id"] for r in knn_join(df, k=1, zoom=12).collect()}
     assert got == {1: 2, 2: 1}
-
-
-def test_nearest_feature_dedup(spark):
-    pts = [
-        (1, 13.0, 52.0),
-        (2, 13.00001, 52.0),     # ~0.7 m from 1 → dropped (higher id)
-        (3, 13.1, 52.0),         # far → kept
-        (4, 13.100001, 52.00001),  # ~1.3 m from 3 → dropped
-    ]
-    df = spark.createDataFrame(pts, "osm_id long, lon double, lat double")
-    kept = sorted(r["osm_id"] for r in nearest_feature_dedup(df, radius_m=10.0).collect())
-    assert kept == [1, 3]

@@ -1,7 +1,7 @@
-"""Ported verbatim from reference test/test_mapping.py (TestMapping +
-TestMappingValidation)."""
+"""Ported from reference test/test_mapping.py (TestMapping +
+TestMappingValidation); geometry types are the engine's `geom_type`
+strings ('point' / 'line' / 'polygon')."""
 
-from osm_export_tool_python_spark import GeomType
 from osm_export_tool_python_spark.functions.mapping import Mapping
 
 
@@ -56,9 +56,9 @@ class TestMapping:
             - building = 'yes'
         """
         m = Mapping(y)
-        assert not m.themes[0].matches(GeomType.POINT, {"building": "yes"})
-        assert not m.themes[0].matches(GeomType.POLYGON, {"building": "no"})
-        assert m.themes[0].matches(GeomType.POLYGON, {"building": "yes"})
+        assert not m.themes[0].matches("point", {"building": "yes"})
+        assert not m.themes[0].matches("polygon", {"building": "no"})
+        assert m.themes[0].matches("polygon", {"building": "yes"})
 
     def test_default_matcher(self):
         y = """
@@ -68,7 +68,7 @@ class TestMapping:
           select:
             - addr:housenumber
         """
-        assert Mapping(y).themes[0].matches(GeomType.POLYGON, {"addr:housenumber": "1234"})
+        assert Mapping(y).themes[0].matches("polygon", {"addr:housenumber": "1234"})
 
     def test_multiple_matchers(self):
         y = """
@@ -82,8 +82,8 @@ class TestMapping:
             - amenity = 'parking'
         """
         m = Mapping(y)
-        assert m.themes[0].matches(GeomType.POLYGON, {"building": "yes"})
-        assert m.themes[0].matches(GeomType.POLYGON, {"amenity": "parking"})
+        assert m.themes[0].matches("polygon", {"building": "yes"})
+        assert m.themes[0].matches("polygon", {"amenity": "parking"})
 
     def test_nonlist_matcher(self):
         y = """
@@ -94,7 +94,7 @@ class TestMapping:
             - addr:housenumber
           where: building = 'yes'
         """
-        assert Mapping(y).themes[0].matches(GeomType.POLYGON, {"building": "yes"})
+        assert Mapping(y).themes[0].matches("polygon", {"building": "yes"})
 
     def test_gt(self):
         y = """
@@ -106,8 +106,8 @@ class TestMapping:
           where: height > 20
         """
         m = Mapping(y)
-        assert m.themes[0].matches(GeomType.POLYGON, {"height": 21})
-        assert not m.themes[0].matches(GeomType.POLYGON, {"height": 20})
+        assert m.themes[0].matches("polygon", {"height": 21})
+        assert not m.themes[0].matches("polygon", {"height": 20})
 
     def test_default_osm_id(self):
         y = """

@@ -1,17 +1,11 @@
 """Structured Streaming incremental export: availableNow over a
 documents directory, exactly-once resume via checkpoint."""
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
 
 from osm_export_tool_python_spark.functions.mapping import Mapping
 from osm_export_tool_python_spark.sources import synth
-from osm_export_tool_python_spark.streaming.incremental import (
-    run_incremental_export,
-    windowed_event_counts,
-)
+from osm_export_tool_python_spark.streaming.incremental import run_incremental_export
 
 YAML = """
 pois:
@@ -60,18 +54,6 @@ def test_incremental_export_and_resume(spark, tmp_path_factory):
     # idempotent re-run: no new data → no new rows
     run_incremental_export(spark, in_dir, mapping, out_dir, ckpt)
     assert spark.read.parquet(out_dir).count() == n2
-
-
-def test_windowed_event_counts_batch_semantics(spark):
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    agg = windowed_event_counts(events.drop("props"))
-    rows = agg.collect()
-    assert rows
-    total = sum(r["n"] for r in rows)
-    assert total == events.count()
-    # window bounds are aligned hours
-    for r in rows[:20]:
-        assert r["start"].minute == 0 and r["start"].second == 0
 
 
 def test_incremental_select_key_collision_suffixed(spark):

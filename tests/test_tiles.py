@@ -375,23 +375,6 @@ def test_exact_kernel_donut_fuzz():
         )
 
 
-def test_bbox_fanout_over_cap_reports_drops(spark):
-    """The visibility companion to a capped bbox cover: the big
-    diagonal way exceeds a 256-tile cap at z8 and must be reported
-    (osm_id, zoom, true cover size), while small features are not."""
-    from osm_export_tool_python_spark.operators.tiles import bbox_fanout_over_cap
-
-    rows = [
-        _pt(1, 13.4, 52.5),
-        _line(2, [(-170.03, -75.17), (150.41, 70.23)]),
-    ]
-    df = spark.createDataFrame(rows, FEATURE_SCHEMA)
-    over = bbox_fanout_over_cap(df, 2, 8, cap=256).collect()
-    assert all(r["osm_id"] == 2 for r in over)
-    z8 = [r for r in over if r["z"] == 8]
-    assert len(z8) == 1 and z8[0]["n_cells"] > 10000
-
-
 def test_exact_kernel_single_point_trailing_part():
     """A degenerate 1-point part AFTER the first ring generates no
     segments; its tile must still be covered (per-ring first-point
