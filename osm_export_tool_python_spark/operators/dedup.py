@@ -11,10 +11,17 @@ all-pairs O(n²) never materializes; the widest shuffle carries one row
 per (doc, band), and hot buckets (boilerplate dups) are exactly the
 rows we want colocated.
 
+Shingles are ROWS, not arrays: `_shingle_rows` explodes each doc's
+n-gram start positions and builds every n-gram with `element_at`
+inside whole-stage codegen.  The minhash signatures (both hash
+families) and the Jaccard verify all read it, so no minhash path runs
+a higher-order `transform` lambda (those are interpreted, never
+compiled).
+
 Hash choices: the minhash variant used for ORACLE parity is md5-based
 (identical hex in Spark and DuckDB, lexicographic min); the scale path
 (`minhash_signature_table`) hashes each shingle ONCE with xxhash64
-over token-hash slices and derives all signature slots via affine
+over its token hashes and derives all signature slots via affine
 mixes — no n-gram string is ever materialized."""
 
 from __future__ import annotations
@@ -33,6 +40,61 @@ def exact_dedup(df: DataFrame, cols, id_col: str) -> DataFrame:
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
+
+
+def _shingle_rows(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int, hashed: bool
+) -> DataFrame:
+    """(id, s) — one row per token n-gram of each doc, in the order of
+    `text.shingles`, with no higher-order function anywhere.
+
+    Each doc's tokens are exploded over their n-gram start positions
+    `sequence(1, k-n+1)`, and the n-gram's tokens are read with
+    `element_at`, so tokenizing, exploding and building the shingle all
+    compile into one whole-stage codegen stage.  A doc shorter than n
+    tokens (k < n, or a NULL text) keeps one position, and the
+    `i + j <= k` guard turns its missing tokens into NULLs, which both
+    forms skip; that yields `text.shingles`' single whole-doc shingle.
+
+    `hashed=False`: s is the n-gram string; `concat_ws(' ', ...)` of the
+    n tokens equals `array_join(slice(tokens, i, n), ' ')`, and a NULL
+    text's shingle is NULL, as `array_join` of a NULL array is.
+
+    `hashed=True`: s is `xxhash64(xxhash64(t_i), ..., xxhash64(t_i+n-1))`.
+    Spark's xxhash64 folds each argument (and each element of an array
+    argument) into the running seed and skips NULLs, so this is
+    bit-identical to `xxhash64(slice(transform(tokens, xxhash64), i, n))`
+    and, for a short doc, to `xxhash64(transform(tokens, xxhash64))`
+    (seed 42 for zero tokens or a NULL text)."""
+    toks = df.select(F.col(id_col).alias("id"), tokens(text_col).alias("t"))
+    k = F.size("t")
+    pos = toks.select(
+        "id",
+        "t",
+        F.explode(
+            F.sequence(F.lit(1), F.greatest(k - shingle_n + 1, F.lit(1)))
+        ).alias("i"),
+    )
+    i = F.col("i")
+    if hashed:
+        s = F.xxhash64(
+            *[
+                F.when(i + j <= k, F.xxhash64(F.element_at("t", i + j)))
+                for j in range(shingle_n)
+            ]
+        )
+    else:
+        s = F.when(
+            F.col("t").isNotNull(),
+            F.concat_ws(
+                " ",
+                *[
+                    F.when(i + j <= k, F.element_at("t", i + j))
+                    for j in range(shingle_n)
+                ],
+            ),
+        )
+    return pos.select("id", s.alias("s"))
 
 
 def minhash_signature_md5(text_col="text", n_hashes: int = 8, shingle_n: int = 3):
@@ -58,20 +120,19 @@ def minhash_signature_md5_table(
     shingle_n: int = 3,
 ) -> DataFrame:
     """(id, g array<string>) — the SAME md5 signatures as
-    `minhash_signature_md5`, computed by explode → groupBy-min instead
-    of per-row higher-order transforms.  The per-row form evaluates
-    n_hashes interpreted `transform` lambdas per document (higher-order
-    functions never reach codegen), which measured ~13 µs per md5 at
-    5 k docs; exploding shingles to rows puts the md5s and the min
-    aggregate inside whole-stage codegen with map-side combine — one
-    row per doc crosses the shuffle.  Values are identical: F.min over
-    the exploded shingle rows is the same lexicographic (binary) min
-    as array_min over the per-row transform results."""
+    `minhash_signature_md5`, computed over `_shingle_rows` → groupBy-min
+    instead of per-row higher-order transforms.  The per-row form
+    evaluates n_hashes interpreted `transform` lambdas per document
+    (higher-order functions never reach codegen), which measured
+    ~13 µs per md5 at 5 k docs; shingle rows put the n-gram strings,
+    the md5s and the min aggregate inside whole-stage codegen with
+    map-side combine — one row per doc crosses the shuffle.  Values are
+    identical: F.min over the shingle rows is the same lexicographic
+    (binary) min as array_min over the per-row transform results."""
     from ..parallel import fan_out
 
-    df = fan_out(df, id_col)
-    exploded = df.select(
-        F.col(id_col).alias("id"), F.explode(shingles(text_col, shingle_n)).alias("s")
+    exploded = _shingle_rows(
+        fan_out(df, id_col), id_col, text_col, shingle_n, hashed=False
     )
     g = exploded.groupBy("id").agg(
         *[
@@ -111,33 +172,24 @@ def minhash_signature_table(
     groupBy-min.
 
     Scale-path hashing (Broder-style universal family, the datasketch
-    construction): each token is xxhash64'd ONCE, each shingle is ONE
-    xxhash64 over its slice of token hashes — no n-gram string is ever
+    construction): each shingle is ONE xxhash64 fold over its tokens'
+    xxhash64s (`_shingle_rows(hashed=True)`) — no n-gram string is ever
     allocated — and the n_hashes slots are cheap affine mixes
     (a_i*h+b_i mod 2^32, pairwise-independent) of that single base
     hash instead of n_hashes independent passes over the shingle
-    bytes.  Per shingle: 1 string hash + n_hashes integer ops, versus
-    n_hashes string hashes + an array_join allocation before.  The
+    bytes.  The shingle rows compile into the same codegen stage as
+    the map-side half of the min aggregate; the values are the ones the
+    former `transform`/`slice` array form gave, bit for bit.  The
     min-agg combines map-side, so the shuffle carries one row per doc.
     Small inputs are fanned out BY THE ID before the explode (see
     `parallel.fan_out`): the heavy map then runs at full width, and
     the groupBy reuses that hash exchange instead of adding one."""
     from ..parallel import fan_out
 
-    df = fan_out(df, id_col)
-    tok_h = F.transform(tokens(text_col), lambda t: F.xxhash64(t))
-    k = F.size(tok_h)
-    # docs shorter than shingle_n yield a single whole-doc shingle,
-    # mirroring `text.shingles`
-    sh_h = F.when(
-        k >= shingle_n,
-        F.transform(
-            F.sequence(F.lit(1), k - shingle_n + 1),
-            lambda i: F.xxhash64(F.slice(tok_h, i, shingle_n)),
-        ),
-    ).otherwise(F.array(F.xxhash64(tok_h)))
-    exploded = df.select(F.col(id_col).alias("id"), F.explode(sh_h).alias("hs"))
-    base = F.col("hs").bitwiseAND(F.lit(0xFFFFFFFF))
+    exploded = _shingle_rows(
+        fan_out(df, id_col), id_col, text_col, shingle_n, hashed=True
+    )
+    base = F.col("s").bitwiseAND(F.lit(0xFFFFFFFF))
     return exploded.groupBy("id").agg(
         *[
             F.min((F.lit(a) * base + F.lit(b)).bitwiseAND(F.lit(0xFFFFFFFF))).alias(
@@ -248,6 +300,45 @@ def band_probe_join(
     )
 
 
+def _shingle_sets(
+    df: DataFrame, ids: DataFrame, id_col: str, text_col: str, shingle_n: int
+) -> DataFrame:
+    """(id, sh) — the distinct shingle set of each doc of `df` whose id
+    is in `ids` (one column, `__cid`); the shingle path of both verify
+    functions.  `df` is semi-joined to `ids` FIRST, so only docs that
+    appear in a candidate pair are tokenized and shingled, into one set
+    per doc however many pairs it is in.
+
+    `collect_set` over `_shingle_rows` is the set `array_distinct`
+    kept, except for a NULL text: its one shingle is NULL, which
+    `array_distinct` keeps and `collect_set` drops.  That doc gets the
+    `[NULL]` set back, so two NULL-text docs verify at 1.0 and a
+    NULL-text doc against an empty one at 0.0, as with `array_distinct`."""
+    touched = df.join(ids, df[id_col] == ids["__cid"], "left_semi")
+    rows = _shingle_rows(touched, id_col, text_col, shingle_n, hashed=False)
+    return rows.groupBy("id").agg(
+        F.when(F.count("s") == 0, F.array(F.lit(None).cast("string")))
+        .otherwise(F.collect_set("s"))
+        .alias("sh")
+    )
+
+
+def _verified(pairs: DataFrame, sh_a: DataFrame, sh_b: DataFrame, threshold):
+    """(id_a, id_b, jaccard) for the pairs whose shingle-set Jaccard
+    (`_shingle_sets` frames joined to each side) is ≥ threshold."""
+    return (
+        pairs.join(sh_a.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
+        .join(sh_b.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+        .withColumn(
+            "jaccard",
+            F.size(F.array_intersect("sh_a", "sh_b"))
+            / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
+        )
+        .where(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
 def jaccard_verify_cross(
     pairs: DataFrame,
     left_df: DataFrame,
@@ -263,34 +354,27 @@ def jaccard_verify_cross(
 
     Scale shape: candidate pairs are a tiny fraction of the corpus, so
     each side is first pruned to candidate-touched docs by a BROADCAST
-    semi-join on the pair ids — shingles are computed only for those
-    docs and the verify joins carry narrow pruned sides, never a full
-    shuffle of corpus text."""
-
-    def pruned_shingles(df, ids, out_id, out_sh):
-        touched = df.join(F.broadcast(ids), df[id_col] == ids["__cid"], "left_semi")
-        return touched.select(
-            F.col(id_col).alias(out_id),
-            F.array_distinct(shingles(text_col, shingle_n)).alias(out_sh),
-        )
-
-    sh_a = pruned_shingles(
-        left_df, pairs.select(F.col("id_a").alias("__cid")).distinct(), "id_a", "sh_a"
+    semi-join on the pair ids (`_shingle_sets`) — shingles are computed
+    only for those docs and the verify joins carry narrow pruned sides,
+    never a full shuffle of corpus text.  The hint holds here because
+    the probe side is a batch much smaller than the corpus;
+    `jaccard_verify`'s self-join candidates can cover most of a
+    boilerplate-heavy corpus, so it leaves the choice to AQE."""
+    sh_a = _shingle_sets(
+        left_df,
+        F.broadcast(pairs.select(F.col("id_a").alias("__cid")).distinct()),
+        id_col,
+        text_col,
+        shingle_n,
     )
-    sh_b = pruned_shingles(
-        right_df, pairs.select(F.col("id_b").alias("__cid")).distinct(), "id_b", "sh_b"
+    sh_b = _shingle_sets(
+        right_df,
+        F.broadcast(pairs.select(F.col("id_b").alias("__cid")).distinct()),
+        id_col,
+        text_col,
+        shingle_n,
     )
-    return (
-        pairs.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verified(pairs, sh_a, sh_b, threshold)
 
 
 def dedup_against_index(
@@ -341,7 +425,7 @@ def lsh_candidate_pairs(
     Docs agreeing on ALL rows of any band share a bucket.
 
     The banded table is repartitioned on the join key (band, bucket)
-    BEFORE the self-join: the signature pipeline (shingle explode +
+    BEFORE the self-join: the signature pipeline (shingle rows +
     xxhash + 16-slot min aggregate) runs entirely above the fan-out
     exchange, so without this the self-join's two sides each recompute
     it — exchange reuse dedupes *exchanges*, not the compute above
@@ -359,7 +443,11 @@ def lsh_candidate_pairs(
     extra AQE stage costs more than the duplicated signature pass it
     saves (measured +0.5 s at 5 k docs vs −2.5 s at 50 k), so the
     repartition only applies when the corpus estimate clears the gate
-    — the same adaptive-shape pattern as `parallel.fan_out`."""
+    — the same adaptive-shape pattern as `parallel.fan_out`.  Those
+    figures were measured with the former `transform`-lambda signature,
+    several times more expensive per doc than the compiled shingle rows,
+    so the pass the gate saves is now much cheaper than when it was set
+    (ROADMAP item 6 carries its recalibration)."""
     banded = banded_signature_table(df, id_col, text_col, n_hashes, bands, shingle_n)
     banded = _reuse_repartition(banded, df, "band", "bucket")
     return band_self_join(banded)
@@ -373,26 +461,30 @@ def jaccard_verify(
     shingle_n: int = 3,
     threshold: float = 0.8,
 ) -> DataFrame:
-    """Exact n-gram Jaccard on candidate pairs; keeps pairs ≥ threshold."""
+    """Exact n-gram Jaccard on candidate pairs; keeps pairs ≥ threshold.
+
+    Only candidate docs are shingled: the fanned-out corpus is
+    semi-joined to the distinct union of id_a and id_b, and each
+    touched doc's distinct shingle set is built once from
+    `_shingle_rows` (`_shingle_sets`) and joined to both pair sides.
+    The semi-join carries no broadcast hint: AQE picks the join from
+    the candidate set's runtime size.  Catalyst pushes the semi-join
+    below the fan-out repartition, so this side hash-partitions the
+    corpus itself rather than reading the signature's exchange; that
+    shuffle runs in the first stage wave, beside the signature's.
+    Jaccard values are bit-identical to the former
+    `array_distinct(text.shingles(...))` arrays, which were built for
+    every doc of the corpus."""
     from ..parallel import fan_out
 
     df = fan_out(df, id_col)
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(shingles(text_col, shingle_n)).alias("sh"),
+    ids = (
+        pairs.select(F.col("id_a").alias("__cid"))
+        .union(pairs.select(F.col("id_b").alias("__cid")))
+        .distinct()
     )
-    out = (
-        pairs.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return out
+    sh = _shingle_sets(df, ids, id_col, text_col, shingle_n)
+    return _verified(pairs, sh, sh, threshold)
 
 
 def minhash_dedup(

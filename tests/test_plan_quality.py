@@ -77,6 +77,47 @@ def test_theme_filter_stays_in_codegen(spark, tmp_path):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def _subtrees(plan, node):
+    """The tree-string lines under each `node` line of a plan string
+    (the lines below it that are indented deeper)."""
+    lines = plan.splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-*()0123456789"))
+
+    out = []
+    for i, line in enumerate(lines):
+        if line.lstrip(" :+-*()0123456789").startswith(node):
+            d, sub = depth(line), []
+            for below in lines[i + 1 :]:
+                if depth(below) <= d:
+                    break
+                sub.append(below)
+            out.append(sub)
+    return out
+
+
+def test_minhash_dedup_stays_in_codegen(spark):
+    """minhash_dedup builds its shingles as exploded rows: the executed
+    plan holds no higher-order lambda (interpreted, never compiled), and
+    the verify shingles only candidate docs — its shingle Generate sits
+    above the LeftSemi join that prunes the corpus to them."""
+    from osm_export_tool_python_spark.operators.dedup import minhash_dedup
+
+    words = ["w%d" % i for i in range(700)]
+    rows = [(i, " ".join(words[i * 10 : i * 10 + 30])) for i in range(60)]
+    rows += [(100 + i, rows[i][1]) for i in range(10)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = minhash_dedup(df, threshold=0.8)
+    assert len(out.collect()) == 60
+    plan = _plan(out)
+    assert "isFinalPlan=true" in plan
+    assert "lambdafunction" not in plan
+    assert any(
+        "LeftSemi" in "\n".join(sub) for sub in _subtrees(plan, "Generate")
+    ), plan
+
+
 def test_knn_join_is_fully_jvm_side(spark):
     """The cell self-join kNN (encode, neighbor ring, haversine, top-k)
     must contain NO Python evaluation — all Column bit math / codegen."""

@@ -154,13 +154,20 @@ def test_simhash_table_matches_column_form(spark):
 def test_minhash_md5_table_matches_column_form(spark):
     """r6 internals change: minhash_signature_md5_table must reproduce
     the per-row minhash_signature_md5 arrays exactly (lexicographic
-    mins over the same md5s), including short-doc single shingles."""
+    mins over the same md5s), including short-doc single shingles,
+    whitespace-only and NULL texts (a NULL text's one shingle is NULL,
+    so every slot is NULL)."""
     df = spark.createDataFrame(
         [
             (1, "alpha beta gamma delta epsilon"),
             (2, "alpha beta gamma delta zeta"),
             (3, "two words"),
             (4, ""),
+            (5, "   "),
+            (6, "A b"),
+            (7, "  a  b c "),
+            (8, None),
+            (9, "a b a b a b"),
         ],
         "doc_id long, text string",
     )
@@ -175,6 +182,7 @@ def test_minhash_md5_table_matches_column_form(spark):
         for r in D.minhash_signature_md5_table(df, n_hashes=8).collect()
     }
     assert col_form == table_form
+    assert table_form[8] == [None] * 8
 
 
 def test_embedding_near_dup(spark):
