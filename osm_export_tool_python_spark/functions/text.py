@@ -1,14 +1,14 @@
 """Text-analysis functions for large-scale training-data pipelines —
-all pure Column expressions (JVM codegen; zero Python in the hot path)
-and each designed to be expressible in ANSI SQL so DuckDB can oracle
-them (driver correctness gate).
+pure Column expressions and DataFrame-to-DataFrame functions (JVM
+codegen; zero Python in the hot path), each designed to be expressible
+in ANSI SQL so DuckDB can oracle them (driver correctness gate).
 
-Ops: tokenization, token counting, shingling, quality scoring,
-language-ID (stopword-hit heuristic), document fingerprinting."""
+Ops: tokenization, token counting, trigram shingle rows, quality
+scoring, language-ID (stopword-hit heuristic), document fingerprinting."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # tiny per-language stopword lists for the n-gram/stopword-hit
@@ -48,16 +48,63 @@ def bpe_ish_token_count(text="text") -> Column:
     )
 
 
-def shingles(text="text", n: int = 3) -> Column:
-    """Token n-gram shingles as space-joined strings; docs shorter than
-    n tokens yield a single whole-doc shingle."""
-    toks = tokens(text)
-    k = F.size(toks)
-    ngrams = F.transform(
-        F.sequence(F.lit(1), k - n + 1),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
+#: Token n-gram width of every shingle: the dedup, decontamination and
+#: repetition operators and their SQL oracles all read trigrams.
+SHINGLE_N = 3
+
+
+def shingle_rows(df: DataFrame, id_col: str, text_col: str, hashed: bool) -> DataFrame:
+    """(id, s) — one row per token trigram of each doc, in token order,
+    with no higher-order function anywhere.
+
+    Each doc's tokens are exploded over their n-gram start positions
+    `sequence(1, k-n+1)`, and the n-gram's tokens are read with
+    `element_at`, so tokenizing, exploding and building the shingle all
+    compile into one whole-stage codegen stage.  A doc shorter than n
+    tokens (k < n, or a NULL text) keeps one position, and the
+    `i + j <= k` guard turns its missing tokens into NULLs, which
+    `concat_ws` and `xxhash64` skip: a short doc has one whole-doc
+    shingle.
+
+    `hashed=False`: s is the n-gram string, the n tokens joined by
+    single spaces (`concat_ws`); an empty text's one shingle is `''`
+    and a NULL text's is NULL.
+
+    `hashed=True`: s is `xxhash64(xxhash64(t_i), ..., xxhash64(t_i+n-1))`.
+    Spark's xxhash64 folds each argument (and each element of an array
+    argument) into the running seed and skips NULLs, so with `th` the
+    array of token xxhash64s this is bit-identical to
+    `xxhash64(slice(th, i, n))` and, for a short doc, to `xxhash64(th)`
+    (seed 42 for zero tokens or a NULL text)."""
+    toks = df.select(F.col(id_col).alias("id"), tokens(text_col).alias("t"))
+    k = F.size("t")
+    pos = toks.select(
+        "id",
+        "t",
+        F.explode(
+            F.sequence(F.lit(1), F.greatest(k - SHINGLE_N + 1, F.lit(1)))
+        ).alias("i"),
     )
-    return F.when(k >= n, ngrams).otherwise(F.array(F.array_join(toks, " ")))
+    i = F.col("i")
+    if hashed:
+        s = F.xxhash64(
+            *[
+                F.when(i + j <= k, F.xxhash64(F.element_at("t", i + j)))
+                for j in range(SHINGLE_N)
+            ]
+        )
+    else:
+        s = F.when(
+            F.col("t").isNotNull(),
+            F.concat_ws(
+                " ",
+                *[
+                    F.when(i + j <= k, F.element_at("t", i + j))
+                    for j in range(SHINGLE_N)
+                ],
+            ),
+        )
+    return pos.select("id", s.alias("s"))
 
 
 def punct_ratio(text="text") -> Column:
@@ -68,9 +115,10 @@ def punct_ratio(text="text") -> Column:
     )
 
 
-def stopword_ratio(text="text", lang: str = "en") -> Column:
+def stopword_ratio(text="text") -> Column:
+    """Share of tokens that are English stopwords."""
     toks = tokens(text)
-    hits = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS[lang])))
+    hits = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS["en"])))
     return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(
         hits / F.size(toks).cast("double")
     )
@@ -115,22 +163,22 @@ def fingerprint(text="text") -> Column:
     return F.md5(F.array_join(F.array_sort(F.array_distinct(tokens(text))), " "))
 
 
-def repetition_ratio(text="text", n: int = 3) -> Column:
-    """Fraction of all token n-grams taken by the single most frequent
-    one — the Gopher-style repetition quality signal (high values flag
-    boilerplate/spam).  Pure Column: aggregate over the shingle array
-    with a running count map; docs shorter than n tokens have exactly
-    one whole-doc shingle ⇒ ratio 1.0."""
-    sh = shingles(text, n)
-    # max count via distinct-outer / filter-inner: O(distinct × k)
-    # cheap codegen'd comparisons with NO allocation per step (the
-    # map-accumulator fold form rebuilt the whole count map once per
-    # shingle — quadratic allocation on exactly the boilerplate docs
-    # this signal exists to flag)
-    mx = F.array_max(
-        F.transform(
-            F.array_distinct(sh),
-            lambda g: F.size(F.filter(sh, lambda x: x == g)),
-        )
+def repetition_ratio(df: DataFrame) -> DataFrame:
+    """(doc_id, rep_ratio) — the fraction of a doc's token trigrams taken
+    by its single most frequent one, rounded to 6 dp: the Gopher-style
+    repetition quality signal (high values flag boilerplate/spam).
+
+    The doc rows are hash-partitioned on doc_id first, so the text
+    crosses one exchange and both aggregates — count per (doc, shingle),
+    then max count over the doc's shingle total — run in codegen'd hash
+    aggregates over `shingle_rows` with no exchange of their own.  A doc
+    shorter than a trigram has one whole-doc shingle ⇒ 1.0 (`""`
+    included).  A NULL text's one shingle is NULL: it counts toward the
+    total but matches no shingle, so its ratio is 0.0."""
+    rows = shingle_rows(df.repartition("doc_id"), "doc_id", "text", hashed=False)
+    per = rows.groupBy("id", "s").agg(
+        F.count("s").alias("c"), F.count("*").alias("n")
     )
-    return F.round(mx / F.size(sh), 6)
+    return per.groupBy("id").agg(
+        F.round(F.max("c") / F.sum("n"), 6).alias("rep_ratio")
+    ).select(F.col("id").alias("doc_id"), "rep_ratio")

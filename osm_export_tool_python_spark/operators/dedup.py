@@ -11,12 +11,12 @@ all-pairs O(n²) never materializes; the widest shuffle carries one row
 per (doc, band), and hot buckets (boilerplate dups) are exactly the
 rows we want colocated.
 
-Shingles are ROWS, not arrays: `_shingle_rows` explodes each doc's
-n-gram start positions and builds every n-gram with `element_at`
-inside whole-stage codegen.  The minhash signatures (both hash
-families) and the Jaccard verify all read it, so no minhash path runs
-a higher-order `transform` lambda (those are interpreted, never
-compiled).
+Shingles are ROWS, not arrays: `functions/text.shingle_rows` explodes
+each doc's trigram start positions and builds every trigram with
+`element_at` inside whole-stage codegen.  The minhash signatures (both
+hash families), the Jaccard verify and the decontamination check all
+read it, so no shingle path runs a higher-order `transform` lambda
+(those are interpreted, never compiled).
 
 Hash choices: the minhash variant used for ORACLE parity is md5-based
 (identical hex in Spark and DuckDB, lexicographic min); the scale path
@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import shingles, tokens
+from ..functions.text import shingle_rows, tokens
 
 
 def exact_dedup(df: DataFrame, cols, id_col: str) -> DataFrame:
@@ -42,98 +42,23 @@ def exact_dedup(df: DataFrame, cols, id_col: str) -> DataFrame:
     )
 
 
-def _shingle_rows(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int, hashed: bool
-) -> DataFrame:
-    """(id, s) — one row per token n-gram of each doc, in the order of
-    `text.shingles`, with no higher-order function anywhere.
-
-    Each doc's tokens are exploded over their n-gram start positions
-    `sequence(1, k-n+1)`, and the n-gram's tokens are read with
-    `element_at`, so tokenizing, exploding and building the shingle all
-    compile into one whole-stage codegen stage.  A doc shorter than n
-    tokens (k < n, or a NULL text) keeps one position, and the
-    `i + j <= k` guard turns its missing tokens into NULLs, which both
-    forms skip; that yields `text.shingles`' single whole-doc shingle.
-
-    `hashed=False`: s is the n-gram string; `concat_ws(' ', ...)` of the
-    n tokens equals `array_join(slice(tokens, i, n), ' ')`, and a NULL
-    text's shingle is NULL, as `array_join` of a NULL array is.
-
-    `hashed=True`: s is `xxhash64(xxhash64(t_i), ..., xxhash64(t_i+n-1))`.
-    Spark's xxhash64 folds each argument (and each element of an array
-    argument) into the running seed and skips NULLs, so this is
-    bit-identical to `xxhash64(slice(transform(tokens, xxhash64), i, n))`
-    and, for a short doc, to `xxhash64(transform(tokens, xxhash64))`
-    (seed 42 for zero tokens or a NULL text)."""
-    toks = df.select(F.col(id_col).alias("id"), tokens(text_col).alias("t"))
-    k = F.size("t")
-    pos = toks.select(
-        "id",
-        "t",
-        F.explode(
-            F.sequence(F.lit(1), F.greatest(k - shingle_n + 1, F.lit(1)))
-        ).alias("i"),
-    )
-    i = F.col("i")
-    if hashed:
-        s = F.xxhash64(
-            *[
-                F.when(i + j <= k, F.xxhash64(F.element_at("t", i + j)))
-                for j in range(shingle_n)
-            ]
-        )
-    else:
-        s = F.when(
-            F.col("t").isNotNull(),
-            F.concat_ws(
-                " ",
-                *[
-                    F.when(i + j <= k, F.element_at("t", i + j))
-                    for j in range(shingle_n)
-                ],
-            ),
-        )
-    return pos.select("id", s.alias("s"))
-
-
-def minhash_signature_md5(text_col="text", n_hashes: int = 8, shingle_n: int = 3):
-    """array<string> signature: per seed, the lexicographic-min
-    md5(seed || shingle).  Oracle-parity variant (DuckDB md5 identical)."""
-    sh = shingles(text_col, shingle_n)
-
-    def slot(i):
-        # closure factory — a default-arg lambda would be arity-2 and
-        # receive the element INDEX as i (silently wrong seeds)
-        return F.array_min(
-            F.transform(sh, lambda s: F.md5(F.concat(F.lit("s%d|" % i), s)))
-        )
-
-    return F.array(*[slot(i) for i in range(n_hashes)])
-
-
 def minhash_signature_md5_table(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     n_hashes: int = 8,
-    shingle_n: int = 3,
 ) -> DataFrame:
-    """(id, g array<string>) — the SAME md5 signatures as
-    `minhash_signature_md5`, computed over `_shingle_rows` → groupBy-min
-    instead of per-row higher-order transforms.  The per-row form
-    evaluates n_hashes interpreted `transform` lambdas per document
-    (higher-order functions never reach codegen), which measured
-    ~13 µs per md5 at 5 k docs; shingle rows put the n-gram strings,
-    the md5s and the min aggregate inside whole-stage codegen with
-    map-side combine — one row per doc crosses the shuffle.  Values are
-    identical: F.min over the shingle rows is the same lexicographic
-    (binary) min as array_min over the per-row transform results."""
+    """(id, g array<string>) — the oracle-parity minhash signature: slot
+    i is the lexicographic-min md5('s<i>|' || shingle) over the doc's
+    trigram shingles (md5 hex is identical in Spark and DuckDB).
+
+    Computed over `shingle_rows` → groupBy-min: the trigram strings, the
+    md5s and the min aggregate run inside whole-stage codegen with
+    map-side combine, and one row per doc crosses the shuffle.  A NULL
+    text's one shingle is NULL, so all its slots are NULL."""
     from ..parallel import fan_out
 
-    exploded = _shingle_rows(
-        fan_out(df, id_col), id_col, text_col, shingle_n, hashed=False
-    )
+    exploded = shingle_rows(fan_out(df, id_col), id_col, text_col, hashed=False)
     g = exploded.groupBy("id").agg(
         *[
             F.min(F.md5(F.concat(F.lit("s%d|" % i), F.col("s")))).alias("h%d" % i)
@@ -161,22 +86,24 @@ def _affine_params(n_hashes: int):
     return params
 
 
+#: Signature slots and LSH bands of the xxhash64 scale path: 4 bands of
+#: 4 rows put the candidate threshold near Jaccard 0.7.
+N_HASHES = 16
+BANDS = 4
+
+
 def minhash_signature_table(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 16,
-    shingle_n: int = 3,
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(id, h0..h{n-1}) minhash signatures via explode → hash →
+    """(id, h0..h{N_HASHES-1}) minhash signatures via explode → hash →
     groupBy-min.
 
     Scale-path hashing (Broder-style universal family, the datasketch
     construction): each shingle is ONE xxhash64 fold over its tokens'
-    xxhash64s (`_shingle_rows(hashed=True)`) — no n-gram string is ever
-    allocated — and the n_hashes slots are cheap affine mixes
+    xxhash64s (`shingle_rows(hashed=True)`) — no n-gram string is ever
+    allocated — and the N_HASHES slots are cheap affine mixes
     (a_i*h+b_i mod 2^32, pairwise-independent) of that single base
-    hash instead of n_hashes independent passes over the shingle
+    hash instead of N_HASHES independent passes over the shingle
     bytes.  The shingle rows compile into the same codegen stage as
     the map-side half of the min aggregate; the values are the ones the
     former `transform`/`slice` array form gave, bit for bit.  The
@@ -186,27 +113,20 @@ def minhash_signature_table(
     the groupBy reuses that hash exchange instead of adding one."""
     from ..parallel import fan_out
 
-    exploded = _shingle_rows(
-        fan_out(df, id_col), id_col, text_col, shingle_n, hashed=True
-    )
+    exploded = shingle_rows(fan_out(df, id_col), id_col, text_col, hashed=True)
     base = F.col("s").bitwiseAND(F.lit(0xFFFFFFFF))
     return exploded.groupBy("id").agg(
         *[
             F.min((F.lit(a) * base + F.lit(b)).bitwiseAND(F.lit(0xFFFFFFFF))).alias(
                 "h%d" % i
             )
-            for i, (a, b) in enumerate(_affine_params(n_hashes))
+            for i, (a, b) in enumerate(_affine_params(N_HASHES))
         ]
     )
 
 
 def banded_signature_table(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(id, band, bucket) — one row per (doc, band); bucket is the
     xxhash64 of the band's signature rows.  This is the frame the LSH
@@ -214,8 +134,8 @@ def banded_signature_table(
     (sources/tables.write_bucketed on (band, bucket)) when the corpus
     index is reused: every later candidate join against it is then
     exchange-free (see band_self_join)."""
-    rows = n_hashes // bands
-    sig = minhash_signature_table(df, id_col, text_col, n_hashes, shingle_n)
+    rows = N_HASHES // BANDS
+    sig = minhash_signature_table(df, id_col, text_col)
     return sig.select(
         "id",
         F.posexplode(
@@ -224,7 +144,7 @@ def banded_signature_table(
                     F.xxhash64(
                         F.lit(b), *[F.col("h%d" % (b * rows + r)) for r in range(rows)]
                     )
-                    for b in range(bands)
+                    for b in range(BANDS)
                 ]
             )
         ).alias("band", "bucket"),
@@ -272,25 +192,18 @@ def band_self_join(banded: DataFrame) -> DataFrame:
     )
 
 
-def band_probe_join(
-    index: DataFrame, probe: DataFrame, broadcast_probe: bool = True
-) -> DataFrame:
+def band_probe_join(index: DataFrame, probe: DataFrame) -> DataFrame:
     """(id_a, id_b) distinct candidates between a PROBE batch's band
     rows (id_a) and a persisted corpus band INDEX (id_b) — the
     incremental half of the reusable-dedup-index story: a daily crawl
     batch is banded (small) and joined against the corpus index
     WITHOUT re-banding or shuffling the corpus.
 
-    Scale shape: with `broadcast_probe` (the typical batch ≪ corpus
-    regime) the probe band table is broadcast, so the corpus index is
-    only SCANNED — zero exchange on either side, no shuffle at all
-    (plan-gated in tests/test_text_dedup.py).  When the batch is too
-    big to broadcast, pass False: the index side still arrives
-    pre-bucketed from write_bucketed's files and only the probe side
-    shuffles into its layout."""
-    p = probe.alias("p")
-    if broadcast_probe:
-        p = F.broadcast(p)
+    Scale shape: the probe band table is broadcast (a batch is much
+    smaller than the corpus), so the corpus index is only SCANNED —
+    zero exchange on either side, no shuffle at all (plan-gated in
+    tests/test_text_dedup.py)."""
+    p = F.broadcast(probe.alias("p"))
     i = index.alias("i")
     return (
         i.join(p, ["band", "bucket"])
@@ -300,22 +213,19 @@ def band_probe_join(
     )
 
 
-def _shingle_sets(
-    df: DataFrame, ids: DataFrame, id_col: str, text_col: str, shingle_n: int
+def shingle_sets(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(id, sh) — the distinct shingle set of each doc of `df` whose id
-    is in `ids` (one column, `__cid`); the shingle path of both verify
-    functions.  `df` is semi-joined to `ids` FIRST, so only docs that
-    appear in a candidate pair are tokenized and shingled, into one set
-    per doc however many pairs it is in.
+    """(id, sh) — the distinct trigram shingle set of each doc of `df`;
+    the set side of every Jaccard computation (the verify functions
+    read it through `_candidate_sets`).
 
-    `collect_set` over `_shingle_rows` is the set `array_distinct`
-    kept, except for a NULL text: its one shingle is NULL, which
-    `array_distinct` keeps and `collect_set` drops.  That doc gets the
-    `[NULL]` set back, so two NULL-text docs verify at 1.0 and a
-    NULL-text doc against an empty one at 0.0, as with `array_distinct`."""
-    touched = df.join(ids, df[id_col] == ids["__cid"], "left_semi")
-    rows = _shingle_rows(touched, id_col, text_col, shingle_n, hashed=False)
+    `collect_set` over `shingle_rows` is the set `array_distinct` of the
+    shingle array keeps, except for a NULL text: its one shingle is
+    NULL, which `collect_set` drops.  That doc gets the `[NULL]` set
+    back, so two NULL-text docs verify at 1.0 and a NULL-text doc
+    against an empty one at 0.0."""
+    rows = shingle_rows(df, id_col, text_col, hashed=False)
     return rows.groupBy("id").agg(
         F.when(F.count("s") == 0, F.array(F.lit(None).cast("string")))
         .otherwise(F.collect_set("s"))
@@ -323,9 +233,18 @@ def _shingle_sets(
     )
 
 
+def _candidate_sets(df: DataFrame, ids: DataFrame, id_col: str, text_col: str):
+    """`shingle_sets` of just the docs of `df` whose id is in `ids`
+    (one `__cid` column): the semi-join runs first, so only docs that
+    appear in a pair are tokenized and shingled, into one set per doc
+    however many pairs it is in."""
+    touched = df.join(ids, df[id_col] == ids["__cid"], "left_semi")
+    return shingle_sets(touched, id_col, text_col)
+
+
 def _verified(pairs: DataFrame, sh_a: DataFrame, sh_b: DataFrame, threshold):
     """(id_a, id_b, jaccard) for the pairs whose shingle-set Jaccard
-    (`_shingle_sets` frames joined to each side) is ≥ threshold."""
+    (`shingle_sets` frames joined to each side) is ≥ threshold."""
     return (
         pairs.join(sh_a.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
         .join(sh_b.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
@@ -345,36 +264,26 @@ def jaccard_verify_cross(
     right_df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 3,
     threshold: float = 0.8,
 ) -> DataFrame:
-    """Exact n-gram Jaccard on (id_a, id_b) candidate pairs whose two
+    """Exact trigram Jaccard on (id_a, id_b) candidate pairs whose two
     sides live in DIFFERENT frames (id_a ∈ left_df, id_b ∈ right_df);
     keeps pairs ≥ threshold.
 
     Scale shape: candidate pairs are a tiny fraction of the corpus, so
     each side is first pruned to candidate-touched docs by a BROADCAST
-    semi-join on the pair ids (`_shingle_sets`) — shingles are computed
+    semi-join on the pair ids (`_candidate_sets`) — shingles are computed
     only for those docs and the verify joins carry narrow pruned sides,
     never a full shuffle of corpus text.  The hint holds here because
     the probe side is a batch much smaller than the corpus;
     `jaccard_verify`'s self-join candidates can cover most of a
     boilerplate-heavy corpus, so it leaves the choice to AQE."""
-    sh_a = _shingle_sets(
-        left_df,
-        F.broadcast(pairs.select(F.col("id_a").alias("__cid")).distinct()),
-        id_col,
-        text_col,
-        shingle_n,
-    )
-    sh_b = _shingle_sets(
-        right_df,
-        F.broadcast(pairs.select(F.col("id_b").alias("__cid")).distinct()),
-        id_col,
-        text_col,
-        shingle_n,
-    )
-    return _verified(pairs, sh_a, sh_b, threshold)
+
+    def side(df, pair_col):
+        ids = F.broadcast(pairs.select(F.col(pair_col).alias("__cid")).distinct())
+        return _candidate_sets(df, ids, id_col, text_col)
+
+    return _verified(pairs, side(left_df, "id_a"), side(right_df, "id_b"), threshold)
 
 
 def dedup_against_index(
@@ -384,10 +293,6 @@ def dedup_against_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.8,
-    n_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-    broadcast_probe: bool = True,
 ) -> DataFrame:
     """INCREMENTAL near-dup removal: rows of `new_df` that have no
     verified near-dup in the corpus behind the persisted band `index`
@@ -402,24 +307,17 @@ def dedup_against_index(
     are a separate composable step (minhash_dedup on the batch); after
     acceptance, append the batch's band rows to the index with
     sources/tables.append_bucketed so the next batch sees them."""
-    new_banded = banded_signature_table(
-        new_df, id_col, text_col, n_hashes, bands, shingle_n
-    )
-    cands = band_probe_join(index, new_banded, broadcast_probe)
+    new_banded = banded_signature_table(new_df, id_col, text_col)
+    cands = band_probe_join(index, new_banded)
     verified = jaccard_verify_cross(
-        cands, new_df, corpus_df, id_col, text_col, shingle_n, threshold
+        cands, new_df, corpus_df, id_col, text_col, threshold
     )
     dupes = verified.select(F.col("id_a").alias("__dup")).distinct()
     return new_df.join(dupes, new_df[id_col] == dupes["__dup"], "left_anti")
 
 
 def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(id_a, id_b) candidate pairs from banded minhash LSH.
     Docs agreeing on ALL rows of any band share a bucket.
@@ -448,7 +346,7 @@ def lsh_candidate_pairs(
     several times more expensive per doc than the compiled shingle rows,
     so the pass the gate saves is now much cheaper than when it was set
     (ROADMAP item 6 carries its recalibration)."""
-    banded = banded_signature_table(df, id_col, text_col, n_hashes, bands, shingle_n)
+    banded = banded_signature_table(df, id_col, text_col)
     banded = _reuse_repartition(banded, df, "band", "bucket")
     return band_self_join(banded)
 
@@ -458,23 +356,19 @@ def jaccard_verify(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 3,
     threshold: float = 0.8,
 ) -> DataFrame:
-    """Exact n-gram Jaccard on candidate pairs; keeps pairs ≥ threshold.
+    """Exact trigram Jaccard on candidate pairs; keeps pairs ≥ threshold.
 
     Only candidate docs are shingled: the fanned-out corpus is
     semi-joined to the distinct union of id_a and id_b, and each
-    touched doc's distinct shingle set is built once from
-    `_shingle_rows` (`_shingle_sets`) and joined to both pair sides.
+    touched doc's distinct shingle set is built once (`_candidate_sets`)
+    and joined to both pair sides.
     The semi-join carries no broadcast hint: AQE picks the join from
     the candidate set's runtime size.  Catalyst pushes the semi-join
     below the fan-out repartition, so this side hash-partitions the
     corpus itself rather than reading the signature's exchange; that
-    shuffle runs in the first stage wave, beside the signature's.
-    Jaccard values are bit-identical to the former
-    `array_distinct(text.shingles(...))` arrays, which were built for
-    every doc of the corpus."""
+    shuffle runs in the first stage wave, beside the signature's."""
     from ..parallel import fan_out
 
     df = fan_out(df, id_col)
@@ -483,7 +377,7 @@ def jaccard_verify(
         .union(pairs.select(F.col("id_b").alias("__cid")))
         .distinct()
     )
-    sh = _shingle_sets(df, ids, id_col, text_col, shingle_n)
+    sh = _candidate_sets(df, ids, id_col, text_col)
     return _verified(pairs, sh, sh, threshold)
 
 
@@ -492,14 +386,11 @@ def minhash_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.8,
-    n_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Full near-dup removal: LSH candidates → jaccard verify →
     drop the higher-id member of each verified pair."""
-    cands = lsh_candidate_pairs(df, id_col, text_col, n_hashes, bands, shingle_n)
-    verified = jaccard_verify(cands, df, id_col, text_col, shingle_n, threshold)
+    cands = lsh_candidate_pairs(df, id_col, text_col)
+    verified = jaccard_verify(cands, df, id_col, text_col, threshold)
     dupes = verified.select(F.col("id_b").alias("__dup")).distinct()
     return df.join(dupes, df[id_col] == dupes["__dup"], "left_anti")
 
@@ -508,32 +399,6 @@ def minhash_dedup(
 # simhash
 # ---------------------------------------------------------------------------
 
-def simhash_col(text_col="text") -> F.Column:
-    """64-bit simhash over tokens, pure Column bit math: for each bit
-    position, sum(+1/-1 per token's xxhash64 bit) > 0 → 1.
-
-    Implemented as: for bit j, count tokens with bit j set, compare to
-    n_tokens/2 (strictly greater → 1: deterministic tie → 0)."""
-    toks = tokens(text_col)
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    n = F.size(toks)
-    def bit_term(j):
-        cnt = F.size(
-            F.filter(
-                hashes,
-                lambda h: F.shiftrightunsigned(h, j).bitwiseAND(F.lit(1)) == 1,
-            )
-        )
-        bit = (cnt * 2 > n).cast("long")
-        return F.shiftleft(bit, j)
-
-    bit_terms = [bit_term(j) for j in range(64)]
-    out = bit_terms[0]
-    for t in bit_terms[1:]:
-        out = out.bitwiseOR(t)
-    return out
-
-
 def hamming_dist_col(a, b) -> F.Column:
     return F.bit_count(a.bitwiseXOR(b))
 
@@ -541,15 +406,17 @@ def hamming_dist_col(a, b) -> F.Column:
 def simhash_table(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(id, sh) — the SAME 64-bit simhash as `simhash_col`, computed by
-    explode → groupBy with 64 conditional-count aggregates instead of
-    64 per-row higher-order `filter` lambdas (interpreted; each lambda
-    re-walks the token-hash array).  Exploding tokens to rows hashes
-    each token ONCE and counts all 64 bit positions inside one
+    """(id, sh) — 64-bit simhash over tokens: bit j is 1 iff strictly
+    more than half of the doc's tokens have bit j set in their xxhash64
+    (a tie gives 0).
+
+    Computed by explode → groupBy with 64 conditional-count aggregates,
+    not 64 per-row higher-order `filter` lambdas (interpreted; each
+    lambda re-walks the token-hash array).  Exploding tokens to rows
+    hashes each token ONCE and counts all 64 bit positions inside one
     codegen'd hash aggregate with map-side combine — one row per doc
     crosses the shuffle.  Zero-token docs are preserved by
-    explode_outer (NULL token → zero counts → sh = 0, exactly
-    simhash_col's value on an empty array)."""
+    explode_outer (NULL token → zero counts → sh = 0)."""
     from ..parallel import fan_out
 
     df = fan_out(df, id_col)
@@ -589,9 +456,8 @@ def simhash_near_dup_pairs(
     16-bit keys; a pair within hamming ≤ n_blocks-1 must agree on ≥1
     block (pigeonhole) — join per block, verify exact hamming."""
     bits = 64 // n_blocks
-    # table-form simhash (explode + codegen'd 64-bit-count aggregate,
-    # identical values to simhash_col — see simhash_table); fan-out of
-    # small inputs happens inside it
+    # table-form simhash (explode + codegen'd 64-bit-count aggregate —
+    # see simhash_table); fan-out of small inputs happens inside it
     h = simhash_table(df, id_col, text_col)
     blocked = h.select(
         "id",
@@ -882,32 +748,28 @@ def contamination_check(
     bench: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 3,
-    min_hits: int = 1,
 ) -> DataFrame:
     """Benchmark DECONTAMINATION: (train doc_id, n_hits) for every
-    training document sharing ≥ min_hits distinct token n-grams with
-    ANY benchmark document — the standard eval-leakage guard in
-    training-data pipelines.
+    training document sharing a token trigram with ANY benchmark
+    document, n_hits being its number of distinct shared trigrams — the
+    standard eval-leakage guard in training-data pipelines.
 
     Scale shape: the benchmark shingle set is tiny relative to the
     corpus (eval suites are MBs) and is BROADCAST, so the training
-    side is one narrow explode + broadcast semi-join + map-side-combine
-    count per doc — no shuffle of corpus data on the shingle key."""
+    side's `shingle_rows` are only scanned into the broadcast join;
+    only the hits reach the distinct count per doc, so unmatched corpus
+    shingles never cross a shuffle.  A small training side is fanned
+    out by the id (`parallel.fan_out`) and the count needs no further
+    exchange; on a large one the distinct aggregate exchanges the hit
+    rows twice, on (id, shingle) and then on id.  A NULL text's NULL
+    shingle never matches the equi-join."""
     from ..parallel import fan_out
 
-    train = fan_out(train, id_col)
-    t = train.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(shingles(text_col, shingle_n))).alias("s"),
-    )
-    b = bench.select(
-        F.explode(F.array_distinct(shingles(text_col, shingle_n))).alias("s")
-    ).distinct()
+    t = shingle_rows(fan_out(train, id_col), id_col, text_col, hashed=False)
+    b = shingle_rows(bench, id_col, text_col, hashed=False).select("s").distinct()
     return (
         t.join(F.broadcast(b), "s")
         .groupBy("id")
-        .agg(F.count("*").cast("long").alias("n_hits"))
-        .where(F.col("n_hits") >= min_hits)
+        .agg(F.countDistinct("s").cast("long").alias("n_hits"))
         .select(F.col("id").alias(id_col), "n_hits")
     )

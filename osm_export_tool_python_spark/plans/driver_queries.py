@@ -150,12 +150,9 @@ _SQL_SHINGLE_CTE = """toks AS (
 def q_doc_repetition(spark, sf_dir):
     """Gopher-style repetition signal: share of all token trigrams
     taken by the single most frequent one (functions/text.py:
-    repetition_ratio, pure Column map-aggregate)."""
-    from ..functions.text import repetition_ratio
-
-    return _t(spark, sf_dir, "documents").select(
-        "doc_id", repetition_ratio("text", 3).alias("rep_ratio")
-    )
+    repetition_ratio — trigram rows, count per (doc, trigram), max over
+    the doc's total)."""
+    return T.repetition_ratio(_t(spark, sf_dir, "documents"))
 
 
 SQL_DOC_REPETITION = (
@@ -178,7 +175,7 @@ def q_doc_contamination(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     bench = docs.where(F.col("doc_id") < 20)
     train = docs.where(F.col("doc_id") >= 20)
-    return D.contamination_check(train, bench, shingle_n=3, min_hits=1)
+    return D.contamination_check(train, bench)
 
 
 SQL_DOC_CONTAMINATION = (
@@ -296,10 +293,10 @@ SELECT doc_id FROM (
 
 def q_minhash_md5(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    sig = D.minhash_signature_md5("text", n_hashes=4, shingle_n=3)
-    return docs.select(
-        "doc_id",
-        *[F.try_element_at(sig, F.lit(i + 1)).alias("h%d" % i) for i in range(4)],
+    sig = D.minhash_signature_md5_table(docs, n_hashes=4)
+    return sig.select(
+        F.col("id").alias("doc_id"),
+        *[F.try_element_at("g", F.lit(i + 1)).alias("h%d" % i) for i in range(4)],
     )
 
 
@@ -325,10 +322,7 @@ FROM sh
 
 def q_jaccard_pairs(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 80)
-    sh = docs.select(
-        F.col("doc_id").alias("id"),
-        F.array_distinct(T.shingles("text", 3)).alias("sh"),
-    )
+    sh = D.shingle_sets(docs)
     a, b = sh.alias("a"), sh.alias("b")
     return (
         a.crossJoin(b)
@@ -367,20 +361,16 @@ WHERE a.id < b.id
 
 def q_lsh_near_dup(spark, sf_dir):
     """END-TO-END near-duplicate detection, fully oracled: md5-minhash
-    signatures (8 slots) → 4-band LSH bucket join → exact n-gram
-    Jaccard verify (≥ 0.5 after 6dp rounding).  The md5 variant is
+    signatures (8 slots) → 4-band LSH bucket join → exact trigram
+    Jaccard verify (`operators/dedup.py:jaccard_verify`, ≥ 0.5, then
+    rounded to 6 dp).  The md5 variant is
     deterministic and DuckDB-replicable, so signatures, banding, the
     candidate join AND the verify step are all hash-checked; the
     xxhash64 scale path (operators/dedup.py:lsh_candidate_pairs) has
     the identical shape with a JVM-intrinsic hash.  Training-data op
     beyond hotosm reference scope (brief requirement)."""
     docs = _t(spark, sf_dir, "documents")
-    # r6: signatures via the explode → groupBy-min table form — the
-    # per-row minhash_signature_md5 Column evaluates 8 interpreted
-    # higher-order transforms per doc (~13 µs/md5); the table form
-    # runs the same md5s inside codegen'd hash aggregation (identical
-    # values — see minhash_signature_md5_table)
-    sig = D.minhash_signature_md5_table(docs, n_hashes=8, shingle_n=3)
+    sig = D.minhash_signature_md5_table(docs, n_hashes=8)
     banded = sig.select(
         "id",
         F.explode(
@@ -398,12 +388,11 @@ def q_lsh_near_dup(spark, sf_dir):
         ).alias("bucket"),
     )
     # ids ONLY through the band self-join (the widest shuffle carries
-    # one short row per (doc, band)); shingle arrays join back onto the
-    # deduped candidate pairs afterwards — the operators/dedup.py
-    # jaccard_verify shape.  The banded table is repartitioned on the
-    # join key first so the signature pipeline sits below ONE exchange
-    # both self-join sides reuse (see lsh_candidate_pairs) instead of
-    # being computed per side.
+    # one short row per (doc, band)); shingle sets of the candidate docs
+    # join back onto the deduped pairs in jaccard_verify.  The banded
+    # table is repartitioned on the join key first so the signature
+    # pipeline sits below ONE exchange both self-join sides reuse (see
+    # lsh_candidate_pairs) instead of being computed per side.
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     banded = banded.repartition(nparts, "bucket")
     a, b = banded.alias("a"), banded.alias("b")
@@ -413,25 +402,11 @@ def q_lsh_near_dup(spark, sf_dir):
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    sh = docs.select(
-        F.col("doc_id").alias("id"),
-        F.array_distinct(T.shingles("text", 3)).alias("sh"),
-    )
-    return (
-        pairs.join(
-            sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
-        )
-        .join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= 0.5)
-        .select("id_a", "id_b", "jaccard")
+    # the oracle rounds before it filters and jaccard_verify filters
+    # first; they disagree only on a raw Jaccard in [0.4999995, 0.5),
+    # which takes a shingle union of 10^6 or more
+    return D.jaccard_verify(pairs, docs, threshold=0.5).withColumn(
+        "jaccard", F.round("jaccard", 6)
     )
 
 
@@ -523,7 +498,7 @@ _SIMHASH_HEX_HI = ("8", "9", "a", "b", "c", "d", "e", "f")
 
 def _simhash_md5_table(docs, n_bits, out):
     """(doc_id, <out>) — an n_bits-wide SimHash with md5-derived bits
-    (oracle-parity variant of operators/dedup.py:simhash_col, which
+    (oracle-parity variant of operators/dedup.py:simhash_table, which
     uses xxhash64 at scale): bit j of doc = majority vote over tokens
     of the top bit of md5(token)'s j-th hex digit (digit ≥ '8'),
     weighted by token frequency; strictly-greater majority, so a tie
@@ -2051,7 +2026,7 @@ def q_minhash_xx_dedup(spark, sf_dir):
             ],
         ),
     )
-    out = D.minhash_dedup(corpus, threshold=0.8, n_hashes=16, bands=4)
+    out = D.minhash_dedup(corpus, threshold=0.8)
     return out.select("doc_id", "grp")
 
 

@@ -1,7 +1,8 @@
-"""The compiled minhash path (`dedup._shingle_rows`) against the
-higher-order-function expressions it replaced, kept inline here as the
-oracle: signature rows, shingle rows and sets, verified Jaccard values
-and `minhash_dedup` survivors must be EQUAL, not merely close.
+"""The compiled shingle paths (`text.shingle_rows`) against the
+higher-order-function expressions they replaced, kept inline here as
+the oracle: signature rows, shingle rows and sets, verified Jaccard
+values, `minhash_dedup` survivors, repetition ratios and
+decontamination hits must be EQUAL, not merely close.
 
 Input: a slice of the benchmark corpus generator (word documents with
 injected exact and one-word-changed copies) plus the edge documents
@@ -134,6 +135,36 @@ def _oracle_dedup(df, threshold):
     return df.join(dupes, df["doc_id"] == dupes["__dup"], "left_anti")
 
 
+def _oracle_repetition(df):
+    # the shingle array is projected once: inlined into the inner
+    # lambda it would be rebuilt once per distinct shingle
+    sh = F.col("sh")
+    mx = F.array_max(
+        F.transform(
+            F.array_distinct(sh),
+            lambda g: F.size(F.filter(sh, lambda x: x == g)),
+        )
+    )
+    return df.select("doc_id", _oracle_shingles().alias("sh")).select(
+        "doc_id", F.round(mx / F.size(sh), 6).alias("rep_ratio")
+    )
+
+
+def _oracle_contamination(train, bench):
+    t = train.select(
+        F.col("doc_id").alias("id"),
+        F.explode(F.array_distinct(_oracle_shingles())).alias("s"),
+    )
+    b = bench.select(F.explode(F.array_distinct(_oracle_shingles())).alias("s")).distinct()
+    return (
+        t.join(F.broadcast(b), "s")
+        .groupBy("id")
+        .agg(F.count("*").cast("long").alias("n_hits"))
+        .where(F.col("n_hits") >= 1)
+        .select(F.col("id").alias("doc_id"), "n_hits")
+    )
+
+
 # --- parity ----------------------------------------------------------------
 
 
@@ -168,12 +199,12 @@ def pairs(spark, corpus):
 
 
 def test_shingle_rows_match_transform_forms(corpus):
-    got = D._shingle_rows(corpus, "doc_id", "text", N, hashed=False)
+    got = T.shingle_rows(corpus, "doc_id", "text", hashed=False)
     want = corpus.select(
         F.col("doc_id").alias("id"), F.explode(_oracle_shingles()).alias("s")
     )
     _assert_same_rows(got, want)
-    got_h = D._shingle_rows(corpus, "doc_id", "text", N, hashed=True)
+    got_h = T.shingle_rows(corpus, "doc_id", "text", hashed=True)
     want_h = corpus.select(
         F.col("doc_id").alias("id"), F.explode(_oracle_shingle_hashes()).alias("s")
     )
@@ -181,7 +212,7 @@ def test_shingle_rows_match_transform_forms(corpus):
 
 
 def test_signature_rows_match_transform_form(corpus):
-    got = D.minhash_signature_table(corpus, n_hashes=N_HASHES, shingle_n=N)
+    got = D.minhash_signature_table(corpus)
     _assert_same_rows(got, _oracle_signature(corpus))
 
 
@@ -191,7 +222,7 @@ def test_verify_shingle_sets_match_array_distinct(corpus, pairs):
         .union(pairs.select(F.col("id_b").alias("__cid")))
         .distinct()
     )
-    got = D._shingle_sets(corpus, ids, "doc_id", "text", N).select(
+    got = D._candidate_sets(corpus, ids, "doc_id", "text").select(
         "id", F.array_sort("sh").alias("sh")
     )
     want = (
@@ -224,3 +255,27 @@ def test_minhash_dedup_survivors_match_transform_form(corpus):
     want = _oracle_dedup(corpus, 0.8)
     _assert_same_rows(got, want)
     assert got.count() < corpus.count()
+
+
+def test_repetition_ratio_matches_lambda_form(corpus):
+    got = T.repetition_ratio(corpus).cache()
+    _assert_same_rows(got, _oracle_repetition(corpus))
+    r = {x["doc_id"]: x["rep_ratio"] for x in got.where(F.col("doc_id") < 0).collect()}
+    got.unpersist()
+    assert r[-6] == r[-7] == 0.0  # NULL: its NULL shingle matches nothing
+    assert r[-1] == 1.0  # '' → the one shingle ''
+    assert r[-9] == 0.5  # 'a b a', 'b a b', 'a b a', 'b a b'
+
+
+def test_contamination_check_matches_lambda_form(corpus):
+    # every edge doc is on the bench side and in the training corpus, so
+    # the repeated trigrams of 'a b a b a b' hit both sides
+    bench = corpus.where((F.col("doc_id") < 0) | (F.col("doc_id") % 10 == 0))
+    got = D.contamination_check(corpus, bench).cache()
+    _assert_same_rows(got, _oracle_contamination(corpus, bench))
+    hits = {r["doc_id"]: r["n_hits"] for r in got.collect()}
+    got.unpersist()
+    assert hits[-9] == 2  # distinct trigrams, not their 4 occurrences
+    assert -6 not in hits and -7 not in hits  # a NULL shingle joins nothing
+    assert hits[-1] == hits[-2] == 1  # '' and '   ' share the shingle ''
+    assert sum(d >= 0 for d in hits) > corpus.where("doc_id % 10 = 0").count()

@@ -118,6 +118,23 @@ def test_minhash_dedup_stays_in_codegen(spark):
     ), plan
 
 
+def test_shingle_queries_have_no_lambdas(spark):
+    """Every driver query over trigram shingles reads `text.shingle_rows`:
+    no higher-order lambda (interpreted, never compiled) is left in its
+    executed plan, and decontamination still broadcasts the bench side."""
+    from osm_export_tool_python_spark.plans import driver_queries as Q
+
+    for q in (
+        Q.q_doc_repetition,
+        Q.q_doc_contamination,
+        Q.q_jaccard_pairs,
+        Q.q_lsh_near_dup,
+        Q.q_minhash_md5,
+    ):
+        assert "lambdafunction" not in _plan(q(spark, SF)), q.__name__
+    assert "BroadcastHashJoin" in _plan(Q.q_doc_contamination(spark, SF))
+
+
 def test_knn_join_is_fully_jvm_side(spark):
     """The cell self-join kNN (encode, neighbor ring, haversine, top-k)
     must contain NO Python evaluation — all Column bit math / codegen."""

@@ -28,15 +28,27 @@ def test_token_counts_oracle(spark, docs):
         assert r["dc"] == len(set(toks))
 
 
+def _py_shingles(text, n=3):
+    """Token n-grams of one text, in order; shorter than n → whole doc."""
+    toks = text.strip().lower().split()
+    if len(toks) < n:
+        return [" ".join(toks)]
+    return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+
 def test_shingles_and_fingerprint(spark):
-    df = spark.createDataFrame(
-        [("a b c d",), ("d c b a",), ("a b",), ("",)], "text string"
-    )
-    rows = df.select(
-        T.shingles("text", 3).alias("sh"), T.fingerprint().alias("fp")
-    ).collect()
-    assert rows[0]["sh"] == ["a b c", "b c d"]
-    assert rows[2]["sh"] == ["a b"]  # shorter than n → whole doc
+    texts = ["a b c d", "d c b a", "a b", "", "  A  b c ", "x y x y x"]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    got = {}
+    for r in T.shingle_rows(df, "doc_id", "text", hashed=False).collect():
+        got.setdefault(r["id"], []).append(r["s"])
+    assert {i: sorted(v) for i, v in got.items()} == {
+        i: sorted(_py_shingles(t)) for i, t in enumerate(texts)
+    }
+    assert sorted(got[0]) == ["a b c", "b c d"]
+    assert got[2] == ["a b"]  # shorter than n → whole doc
+    assert got[3] == [""]
+    rows = df.orderBy("doc_id").select(T.fingerprint().alias("fp")).collect()
     # fingerprint is order-insensitive over the token set
     assert rows[0]["fp"] == rows[1]["fp"]
     assert rows[0]["fp"] != rows[2]["fp"]
@@ -65,14 +77,8 @@ def test_exact_dedup(spark):
     assert kept == [1, 3]
 
 
-def _jaccard(a, b, n=3):
-    def sh(t):
-        toks = t.strip().lower().split()
-        if len(toks) < n:
-            return {" ".join(toks)}
-        return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
-
-    sa, sb = sh(a), sh(b)
+def _jaccard(a, b):
+    sa, sb = set(_py_shingles(a)), set(_py_shingles(b))
     return len(sa & sb) / len(sa | sb)
 
 
@@ -86,7 +92,7 @@ def test_minhash_lsh_recall_and_verify(spark, docs):
         if _jaccard(ta, tb) >= 0.8:
             truth.add((min(ia, ib), max(ia, ib)))
 
-    cands = D.lsh_candidate_pairs(docs, "doc_id", "text", n_hashes=16, bands=4)
+    cands = D.lsh_candidate_pairs(docs, "doc_id", "text")
     verified = D.jaccard_verify(cands, docs, "doc_id", "text", threshold=0.8)
     got = {(r["id_a"], r["id_b"]) for r in verified.collect()}
     # verify kills false positives: everything found is true
@@ -124,14 +130,37 @@ def test_simhash_pairs(spark):
 
 def test_simhash_identical_is_zero(spark):
     df = spark.createDataFrame([(1, "a b c"), (2, "a b c")], "doc_id long, text string")
-    rows = df.select(D.simhash_col().alias("h")).collect()
-    assert rows[0]["h"] == rows[1]["h"]
+    rows = D.simhash_table(df).collect()
+    assert rows[0]["sh"] == rows[1]["sh"]
+
+
+def _simhash_col(text_col="text"):
+    """Per-row 64-bit simhash, 64 higher-order `filter` lambdas over the
+    token hashes: for bit j, count tokens with bit j set, compare to
+    n_tokens/2 (strictly greater → 1: deterministic tie → 0)."""
+    toks = T.tokens(text_col)
+    hashes = F.transform(toks, lambda t: F.xxhash64(t))
+    n = F.size(toks)
+
+    def bit_term(j):
+        cnt = F.size(
+            F.filter(
+                hashes,
+                lambda h: F.shiftrightunsigned(h, j).bitwiseAND(F.lit(1)) == 1,
+            )
+        )
+        return F.shiftleft((cnt * 2 > n).cast("long"), j)
+
+    out = bit_term(0)
+    for j in range(1, 64):
+        out = out.bitwiseOR(bit_term(j))
+    return out
 
 
 def test_simhash_table_matches_column_form(spark):
-    """r6 internals change: simhash_table (explode → codegen'd 64-bit-
-    count aggregate) must reproduce simhash_col exactly, including the
-    zero-token and single-token edges."""
+    """simhash_table (explode → codegen'd 64-bit-count aggregate) must
+    reproduce the per-row lambda form `_simhash_col` exactly, including
+    the zero-token and single-token edges."""
     df = spark.createDataFrame(
         [
             (1, "the quick brown fox jumps over the lazy dog"),
@@ -145,18 +174,20 @@ def test_simhash_table_matches_column_form(spark):
     )
     col_form = {
         r["doc_id"]: r["h"]
-        for r in df.select("doc_id", D.simhash_col().alias("h")).collect()
+        for r in df.select("doc_id", _simhash_col().alias("h")).collect()
     }
     table_form = {r["id"]: r["sh"] for r in D.simhash_table(df).collect()}
     assert col_form == table_form
 
 
 def test_minhash_md5_table_matches_column_form(spark):
-    """r6 internals change: minhash_signature_md5_table must reproduce
-    the per-row minhash_signature_md5 arrays exactly (lexicographic
-    mins over the same md5s), including short-doc single shingles,
-    whitespace-only and NULL texts (a NULL text's one shingle is NULL,
-    so every slot is NULL)."""
+    """minhash_signature_md5_table must reproduce the per-seed
+    lexicographic-min md5('s<i>|' || shingle) of a Python oracle
+    exactly, including short-doc single shingles, whitespace-only and
+    NULL texts (a NULL text's one shingle is NULL, so every slot is
+    NULL)."""
+    import hashlib
+
     df = spark.createDataFrame(
         [
             (1, "alpha beta gamma delta epsilon"),
@@ -172,10 +203,18 @@ def test_minhash_md5_table_matches_column_form(spark):
         "doc_id long, text string",
     )
     col_form = {
-        r["doc_id"]: r["g"]
-        for r in df.select(
-            "doc_id", D.minhash_signature_md5("text", n_hashes=8).alias("g")
-        ).collect()
+        r["doc_id"]: (
+            [None] * 8
+            if r["text"] is None
+            else [
+                min(
+                    hashlib.md5(("s%d|%s" % (i, s)).encode()).hexdigest()
+                    for s in _py_shingles(r["text"])
+                )
+                for i in range(8)
+            ]
+        )
+        for r in df.collect()
     }
     table_form = {
         r["id"]: r["g"]
@@ -435,7 +474,7 @@ def test_repetition_ratio_and_contamination(spark):
         ],
         "doc_id long, text string",
     )
-    r = {x["doc_id"]: x["r"] for x in df.select("doc_id", repetition_ratio().alias("r")).collect()}
+    r = {x["doc_id"]: x["rep_ratio"] for x in repetition_ratio(df).collect()}
     assert r[1] == 1.0 and r[3] == 1.0
     assert r[2] == pytest.approx(1.0 / 5.0)
 
